@@ -549,7 +549,7 @@ object FanIn {
           .as[(Long, Seq[Double])].collect()
           .map { case (c, ce) => (c, ce.toArray) }.toSeq
         val f = SemDeDup.assignCellFunc(book)
-        val s2 = graft.streaming.Streams.rocksDbSession(spark)
+        val s2 = Streams.session(spark, Streams.Store.RocksDb, Streams.StatePartitions.Default)
         import s2.implicits._
         val base = java.nio.file.Files.createTempDirectory("fanin-q96").toString
         val schema = s2.read.parquet(s"$outDir/embeddings.parquet").schema

@@ -59,7 +59,9 @@ object Service {
         (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
           StepContext(spark, ConfigAssembly.warehouseFor(real, warehouse), ledger, m,
             schrittRunId = stepRunId, konfigurationenId = real.konfigurationenId,
-            sourceSpec = real.connections.map(_.source)))
+            sourceSpec = real.connections.map(_.source),
+            // the run's request time, stamped on every row the step writes
+            abfragezeitpunkt = m.belegungszeit.getOrElse(clock())))
       // result-mail dispatch (`Workflow.cs:1296-1340` / Abort `1560-1605`):
       // select recipients per Nur_Fehler/CC, render the report, deliver
       // through the Mailer boundary, record the send decision in the
@@ -73,7 +75,7 @@ object Service {
         val subject = s"ETL Workflow $workflowId " +
           (if (result.success) "erfolgreich" else "fehlgeschlagen")
         try mailer.send(graft.report.Mailer.Mail(rcpt.to, rcpt.cc, subject, report,
-          graft.report.MailReport.renderHtml(ledger, result.workflowRunId)))
+          graft.report.MailReport.renderHtml(report)))
         catch {
           case scala.util.control.NonFatal(e) => ledger.error(
             ErrorRow.TypDienst, ErrorRow.SeverityMinor,

@@ -828,12 +828,14 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
   private def rewriteInPlace(table: String, contents: org.apache.spark.sql.DataFrame): Unit = {
     // under the table monitor so recoverIfTorn can never slide a dir
     // beneath the swap's rename pair (ADVICE r10); same-table rewrites
-    // serialize, which they already required for correctness
+    // serialize, which they already required for correctness. The memo
+    // is seeded under it too: seeded after release, a rewrite could pair
+    // its schema with the files a later rewrite had already swapped in.
     monitor(table).synchronized {
       graft.util.AtomicSwap.swapInto(path(table), "__rewrite") { tmp =>
         contents.write.mode(SaveMode.Overwrite).format(format).save(tmp)
       }
+      seedSchemaMemo(table, contents.schema, replaced = true)
     }
-    seedSchemaMemo(table, contents.schema, replaced = true)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,56 +59,28 @@ object GraftHashUtil {
   }
 }
 
-/** `SparkSessionExtensions` wiring: registers `graft_hash32` so SQL text
-  * and `call_function` resolve it. Activate with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` or
-  * [[GraftExtensions.register]] on a live session.
+/** `SparkSessionExtensions` wiring: registers `graft_hash32` and
+  * `graft_dot` so SQL text and `call_function` resolve them, and injects
+  * the native rewrite rules. `graft.Sessions.builder` installs it, so
+  * every session the engine builds, and every clone of one, carries the
+  * functions and the rules.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.hash32Descriptor)
-    ext.injectFunction(GraftExtensions.dotDescriptor)
+    // arity validated in the builder (r10 review): a wrong-arity SQL call
+    // used to surface children.head/children(1) internals
+    // (NoSuchElement/IndexOutOfBounds) instead of an analysis-time message
+    def function(name: String, cls: Class[_], arity: Int)(build: Seq[Expression] => Expression) =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity, s"$name requires exactly $arity argument" +
+            (if (arity == 1) "" else "s") + s", got ${children.length}")
+          build(children)
+        }))
+    function("graft_hash32", classOf[Hash32Expression], 1)(c => Hash32Expression(c.head))
+    function("graft_dot", classOf[DotProduct], 2)(c => DotProduct(c(0), c(1)))
     ext.injectOptimizerRule(_ => Hash32Rewrite)
     ext.injectOptimizerRule(_ => VectorFoldRewrite)
-  }
-}
-
-object GraftExtensions {
-  // arity validated in the builder (r10 review): a wrong-arity SQL call
-  // used to surface children.head/children(1) internals
-  // (NoSuchElement/IndexOutOfBounds) instead of an analysis-time message
-  private[functions] val hash32Descriptor = (
-    FunctionIdentifier("graft_hash32"),
-    new ExpressionInfo(classOf[Hash32Expression].getName, "graft_hash32"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1,
-        s"graft_hash32 requires exactly 1 argument, got ${children.length}")
-      Hash32Expression(children.head): Expression
-    })
-
-  private[functions] val dotDescriptor = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2,
-        s"graft_dot requires exactly 2 arguments, got ${children.length}")
-      DotProduct(children(0), children(1)): Expression
-    })
-
-  /** Direct registration on an existing session (tests, driver-provided
-    * sessions built without the extensions config). Also installs the
-    * rewrite rules via `experimental.extraOptimizations`.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      hash32Descriptor._1, hash32Descriptor._2, hash32Descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      dotDescriptor._1, dotDescriptor._2, dotDescriptor._3)
-    val rules = Seq(Hash32Rewrite, VectorFoldRewrite)
-      .filterNot(spark.experimental.extraOptimizations.contains)
-    if (rules.nonEmpty)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ rules
   }
 }
 
@@ -119,8 +90,7 @@ object GraftExtensions {
   * documented built-ins (and keeps working on any vanilla session);
   * sessions with the extension get the fused fast path for free. The
   * Catalyst-rule tier of the brief's custom-operator ladder, wired via
-  * `SparkSessionExtensions.injectOptimizerRule` /
-  * `experimental.extraOptimizations`.
+  * `SparkSessionExtensions.injectOptimizerRule`.
   */
 object Hash32Rewrite
   extends org.apache.spark.sql.catalyst.rules.Rule[

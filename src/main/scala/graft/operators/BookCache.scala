@@ -35,7 +35,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Scope and lifetime:
   *   - entries are per-SparkSession (`corpusLike.sparkSession` at build
-  *     time): a hit from a different session — `newSession()` isolates
+  *     time): a hit from a different session — a session clone isolates
   *     temp views/conf, and a stopped context cannot serve blocks —
   *     rebuilds instead of cross-wiring plans between sessions;
   *   - values are the call site's own `localCheckpoint(true)` books

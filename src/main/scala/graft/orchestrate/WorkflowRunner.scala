@@ -130,15 +130,13 @@ final class WorkflowRunner(
       macroCtxOpt = Some(macroCtx)
 
       manager.initializingToExecuting(spec.id)
-      ledger.markExecuting(wfRunId)
 
       parallelLocks.withModule("workflow", spec.parallelsperre) {
-        runPackageTree(spec, spec.masterPackageId, wfRunId, macroCtx, stepContext, token)
+        executing(wfRunId)(
+          runPackageTree(spec, spec.masterPackageId, wfRunId, macroCtx, stepContext, token))
       }
     }
     if (attempt.isFailure) token.cancel()
-
-    ledger.markExecuted(wfRunId)
 
     attempt match {
       case Success(_) =>
@@ -173,6 +171,15 @@ final class WorkflowRunner(
     }
   }
 
+  /** A level's execution window, run inside the level's lock scope: the
+    * end is stamped before the lock is released, so a waiting claimant's
+    * execution start can never precede it in the ledger.
+    */
+  private def executing[A](runId: Long)(body: => A): A = {
+    ledger.markExecuting(runId)
+    try body finally ledger.markExecuted(runId)
+  }
+
   /** Package DAG rooted at `rootPkg` with shared predecessor execution. */
   private def runPackageTree(
       spec: WorkflowSpec, rootPkg: Long, wfRunId: Long, macroCtx: Macros.Context,
@@ -196,15 +203,15 @@ final class WorkflowRunner(
     ledger.markStarted(pkgRunId)
     val result = Try {
       parallelLocks.withModule("package", pkg.parallelsperre) {
-        ledger.markExecuting(pkgRunId)
-        val prioritized = pkg.realizations.map(r => r.prioritaet -> r)
-        Await.result(
-          PriorityBarrier.run(prioritized)(r =>
-            Future(runRealization(r, wfRunId, pkgRunId, macroCtx, stepContext, token))),
-          Duration.Inf)
+        executing(pkgRunId) {
+          val prioritized = pkg.realizations.map(r => r.prioritaet -> r)
+          Await.result(
+            PriorityBarrier.run(prioritized)(r =>
+              Future(runRealization(r, wfRunId, pkgRunId, macroCtx, stepContext, token))),
+            Duration.Inf)
+        }
       }
     }
-    ledger.markExecuted(pkgRunId)
     ledger.markFinished(pkgRunId, success = result.isSuccess)
     result.get
   }
@@ -221,27 +228,27 @@ final class WorkflowRunner(
     val stepCap = new Gates.StepCap(real.anzahlParalleleSchritte)
     val result = Try {
       parallelLocks.withModule("realization", real.parallelsperre) {
-        ledger.markExecuting(realRunId)
-        val ordered = real.steps.sortBy(_.schrittReihenfolge)
-        // Steps START in Schritt_Reihenfolge order and run concurrently up
-        // to the caps (`Realization.cs:573-885`): the slot is acquired in
-        // the submission loop, so step k+cap cannot start before an
-        // earlier step released — with cap 1 execution is strictly
-        // sequential, exactly the reference's observable ordering.
-        val futures = ordered.map { s =>
-          stepCap.acquire()
-          Future {
-            try gates.withSlot(
-              runStep(s, real, wfRunId, pkgRunId, realRunId, macroCtx, stepContext, token))
-            finally stepCap.release()
+        executing(realRunId) {
+          val ordered = real.steps.sortBy(_.schrittReihenfolge)
+          // Steps START in Schritt_Reihenfolge order and run concurrently up
+          // to the caps (`Realization.cs:573-885`): the slot is acquired in
+          // the submission loop, so step k+cap cannot start before an
+          // earlier step released — with cap 1 execution is strictly
+          // sequential, exactly the reference's observable ordering.
+          val futures = ordered.map { s =>
+            stepCap.acquire()
+            Future {
+              try gates.withSlot(
+                runStep(s, real, wfRunId, pkgRunId, realRunId, macroCtx, stepContext, token))
+              finally stepCap.release()
+            }
           }
+          // waitAll, not sequence: the realization must not close (and let
+          // compensation start) while a sibling step is still executing
+          Await.result(Futures.waitAll(futures), Duration.Inf)
         }
-        // waitAll, not sequence: the realization must not close (and let
-        // compensation start) while a sibling step is still executing
-        Await.result(Futures.waitAll(futures), Duration.Inf)
       }
     }
-    ledger.markExecuted(realRunId)
     ledger.markFinished(realRunId, success = result.isSuccess)
     result.get
     ()
@@ -267,13 +274,12 @@ final class WorkflowRunner(
           // cancellation cascade: a sibling failure aborts queued steps
           // before they touch data (`Step.cs:888-1060` Abort)
           token.checkpoint()
-          ledger.markExecuting(stepRunId)
-          Steps.execute(step, stepContext(stepMacroCtx, Some(stepRunId), real))
+          executing(stepRunId)(
+            Steps.execute(step, stepContext(stepMacroCtx, Some(stepRunId), real)))
         }
       }
     }
     if (result.isFailure) token.cancel()
-    ledger.markExecuted(stepRunId)
     ledger.markFinished(stepRunId, success = result.isSuccess)
     result match {
       case Failure(e: EtlStateException)

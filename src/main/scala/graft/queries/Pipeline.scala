@@ -685,10 +685,8 @@ object Pipeline {
     "q48_streaming_dedup",
     (s, dir) => {
       val base = graft.util.TempDirs.scratch("q48stream")
-      // source-sized state layout at stream birth (r16) — see q54
-      val s2 = graft.streaming.Streams.statefulSession(s,
-        graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/documents.parquet").length()))
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(s"$dir/documents.parquet"))
       import s2.implicits._
       val schema = s2.read.parquet(s"$dir/documents.parquet").schema
       // the stream source wants a DIRECTORY; the sf dir + a glob filter
@@ -794,13 +792,10 @@ object Pipeline {
     (s, dir) => {
       import s.implicits._
       val base = graft.util.TempDirs.scratch("q54stream")
-      // state partitions sized to the SOURCE at stream birth (r16,
-      // VERDICT r15 next #4): the window-keyed state store otherwise
-      // boots one instance per session shuffle partition per drain —
-      // see Streams.derivedStatePartitions for the scale argument
-      val s2 = graft.streaming.Streams.statefulSession(s,
-        graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length()))
+      // state sized to the SOURCE at stream birth (r16): the window-keyed
+      // store otherwise boots one instance per shuffle partition per drain
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(s"$dir/events.parquet"))
       val stream = Tables.eventsStream(s2, dir)
       val q = graft.streaming.Streams.windowedCounts(stream)
         .writeStream.format("parquet")
@@ -847,10 +842,8 @@ object Pipeline {
     "q55_streaming_sessions",
     (s, dir) => {
       val base = graft.util.TempDirs.scratch("q55stream")
-      // source-sized state layout at stream birth (r16) — see q54
-      val s2 = graft.streaming.Streams.statefulSession(s,
-        graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length()))
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(s"$dir/events.parquet"))
       import s2.implicits._
       val stream = Tables.eventsStream(s2, dir)
         .select($"user_id", $"ts", $"event_type", $"value")
@@ -918,14 +911,10 @@ object Pipeline {
   val q66 = QueryDef(
     "q66_streaming_sessions_v2",
     (s, dir) => {
-      // source-sized state layout at stream birth (r16) — see q54; the
-      // RocksDB store pays per-instance boot/commit per drain, so the
-      // bound matters even more than for the HDFS-backed twin
-      val s2 = graft.streaming.Streams.rocksDbSession(s,
-        statePartitions = Some(graft.streaming.Streams.derivedStatePartitions(s,
-          new java.io.File(s"$dir/events.parquet").length())))
-      require(graft.streaming.Streams.stateV2Ready(s2),
-        "state-v2 gate needs Spark 4+ with the RocksDB state store provider")
+      // the RocksDB store pays per-instance boot/commit per drain, so the
+      // source-sized bound matters even more than for the HDFS-backed twin
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.RocksDb,
+        graft.streaming.Streams.StatePartitions.OfSource(s"$dir/events.parquet"))
       import s2.implicits._
       val base = graft.util.TempDirs.scratch("q66stream")
       val stream = Tables.eventsStream(s2, dir)

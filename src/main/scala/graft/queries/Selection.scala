@@ -316,13 +316,8 @@ object Selection {
       // layout to the DATA bound, not the session's batch-join
       // parallelism (r15: 32 RocksDB instances booted per drain for ≤8
       // populated cells; the store boot, not the state, was the cost)
-      val s2 = graft.streaming.Streams.rocksDbSession(s,
-        // max(1, …): an empty codebook read must not set
-        // spark.sql.shuffle.partitions to 0, which fails every shuffle
-        // in the cloned session (ADVICE r15)
-        statePartitions = Some(math.max(1, cents.size)))
-      require(graft.streaming.Streams.stateV2Ready(s2),
-        "streaming semdedup needs Spark 4+ with the RocksDB state store provider")
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.RocksDb,
+        graft.streaming.Streams.StatePartitions.Exactly(cents.size))
       import s2.implicits._
       val base = graft.util.TempDirs.scratch("q96stream")
       val schema = s2.read.parquet(s"$dir/embeddings.parquet").schema
@@ -401,13 +396,8 @@ object Selection {
           .map { case (cid, ce) => (cid, ce.toArray) }.toSeq
       }
       // state partitions from the codebook bound, as in q96 (r15)
-      val s2 = graft.streaming.Streams.rocksDbSession(s,
-        // max(1, …): an empty codebook read must not set
-        // spark.sql.shuffle.partitions to 0, which fails every shuffle
-        // in the cloned session (ADVICE r15)
-        statePartitions = Some(math.max(1, cents.size)))
-      require(graft.streaming.Streams.stateV2Ready(s2),
-        "streaming semdedup needs Spark 4+ with the RocksDB state store provider")
+      val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.RocksDb,
+        graft.streaming.Streams.StatePartitions.Exactly(cents.size))
       import s2.implicits._
       val base = graft.util.TempDirs.scratch("q102stream")
       val assign = graft.operators.SemDeDup.assignCellFunc(cents)

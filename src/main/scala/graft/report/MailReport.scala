@@ -84,13 +84,11 @@ object MailReport {
   def shouldSend(success: Boolean, r: Recipients): Boolean =
     !success || r.to.nonEmpty
 
-  /** Minimal HTML rendering of the same report (the reference fills
+  /** Minimal HTML rendering of a [[render]]ed report (the reference fills
     * `www/diz_mail.html` templates; structure parity, not pixels).
     */
-  def renderHtml(ledger: RunLedger, workflowRunId: Long): String = {
-    val text = render(ledger, workflowRunId)
+  def renderHtml(text: String): String =
     "<html><body><pre>" +
       text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;") +
       "</pre></body></html>"
-  }
 }

@@ -145,12 +145,9 @@ object StreamTransforms {
           ctx.warehouse.read(spark, seenT), key, mBits, k), bloomT)
       // the foreachBatch body's exchanges (probe distinct, confirm
       // anti-join, bitmap fold) are BATCH-sized, and AQE cannot coalesce
-      // them under a streaming plan — run the drain on a source-sized
-      // clone (r16; same rule as the stateful streams, see
-      // Streams.derivedStatePartitions)
-      val s2 = graft.streaming.Streams.statefulSession(spark,
-        graft.streaming.Streams.derivedStatePartitions(spark,
-          graft.streaming.Streams.dirBytes(Transforms.str(p, "dir"))))
+      // them under a streaming plan — drain on a source-sized clone (r16)
+      val s2 = graft.streaming.Streams.session(spark, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(Transforms.str(p, "dir")))
       val stream = s2.readStream
         .schema(StructType.fromDDL(Transforms.str(p, "schema")))
         .option("maxFilesPerTrigger", Transforms.long(p, "maxfiles", Some(1L)))
@@ -207,11 +204,9 @@ object StreamTransforms {
             .withColumn("batch", lit(0L)), bt)
       }
       val admitted = new java.util.concurrent.atomic.AtomicLong(0L)
-      // source-sized clone for the batch-sized per-batch exchanges (r16)
-      // — see bloom_ingest_stream above
-      val s2 = graft.streaming.Streams.statefulSession(spark,
-        graft.streaming.Streams.derivedStatePartitions(spark,
-          graft.streaming.Streams.dirBytes(Transforms.str(p, "dir"))))
+      // source-sized clone for the batch-sized exchanges, as in bloom_ingest_stream
+      val s2 = graft.streaming.Streams.session(spark, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(Transforms.str(p, "dir")))
       val q = graft.streaming.Streams.neardupAdmitStream(
         arrivalStream(s2, p), ctx.warehouse,
         histTable = histT,
@@ -274,12 +269,9 @@ object StreamTransforms {
     // tick of the always-on sessionizer. Rows = closed sessions this
     // drain admitted (ErwarteteDaten).
     "sessionize_stream" -> { (ctx, p) =>
-      // state partitions sized to the watched folder at stream birth
-      // (r16) — see Streams.derivedStatePartitions; the clone keeps the
-      // step's session untouched (stream-birth setting, q54's rationale)
-      val s2 = graft.streaming.Streams.statefulSession(ctx.spark,
-        graft.streaming.Streams.derivedStatePartitions(ctx.spark,
-          graft.streaming.Streams.dirBytes(Transforms.str(p, "dir"))))
+      // state sized to the watched folder at stream birth (r16)
+      val s2 = graft.streaming.Streams.session(ctx.spark, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(Transforms.str(p, "dir")))
       import s2.implicits._
       val events = arrivalStream(s2, p)
         .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -306,11 +298,8 @@ object StreamTransforms {
     // still-open windows carry in the checkpoint across drains. Rows =
     // closed windows this drain emitted.
     "windowed_counts_stream" -> { (ctx, p) =>
-      // source-sized state layout at stream birth (r16) — see
-      // sessionize_stream above
-      val s2 = graft.streaming.Streams.statefulSession(ctx.spark,
-        graft.streaming.Streams.derivedStatePartitions(ctx.spark,
-          graft.streaming.Streams.dirBytes(Transforms.str(p, "dir"))))
+      val s2 = graft.streaming.Streams.session(ctx.spark, graft.streaming.Streams.Store.Hdfs,
+        graft.streaming.Streams.StatePartitions.OfSource(Transforms.str(p, "dir")))
       drainObserved(s2, () =>
         graft.streaming.Streams.windowedCounts(arrivalStream(s2, p),
           watermark = p.getOrElse("watermark", "30 minutes"),
@@ -334,10 +323,8 @@ object StreamTransforms {
     // CLOSURE assignment path, the big-C production route (assignCellLit
     // inlines O(C·dim) expressions — q40's audit forbids that past toy
     // C). Per-cell state lives in the RocksDB store of a cloned
-    // session (state-v2 requirement; the shared session's other streams
-    // keep their default store) with changelog checkpointing and an
-    // optional state-partition count sized at stream birth — see
-    // [[graft.streaming.Streams.rocksDbSession]]. The operator's ordering contract (ids
+    // session ([[graft.streaming.Streams.session]]; the shared session's
+    // other streams keep their default store). The operator's ordering contract (ids
     // non-decreasing across micro-batches) is the feed's to meet —
     // mtime-ordered arrival files of an id-ordered corpus do, and a
     // violation fails the query (and so the step) loudly.
@@ -350,12 +337,10 @@ object StreamTransforms {
       // key = cell, cardinality ≤ |codebook| — the r15 q96 rule), min'd
       // with the session default so a real codebook keeps full
       // parallelism; an explicit statepartitions= still wins (r16)
-      val s2 = graft.streaming.Streams.rocksDbSession(ctx.spark,
-        statePartitions = Some(p.get("statepartitions").map(_.toInt).getOrElse(
-          math.max(1, math.min(cents.size,
-            ctx.spark.conf.get("spark.sql.shuffle.partitions").toInt)))))
-      require(graft.streaming.Streams.stateV2Ready(s2),
-        "semdedup_stream needs Spark 4+ with the RocksDB state store provider")
+      val s2 = graft.streaming.Streams.session(ctx.spark, graft.streaming.Streams.Store.RocksDb,
+        graft.streaming.Streams.StatePartitions.Exactly(
+          p.get("statepartitions").map(_.toInt).getOrElse(math.min(cents.size,
+            ctx.spark.conf.get("spark.sql.shuffle.partitions").toInt))))
       import s2.implicits._
       val assign = graft.operators.SemDeDup.assignCellFunc(cents)
       val idCol = p.getOrElse("id", "vec_id")

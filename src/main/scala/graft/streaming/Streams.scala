@@ -742,80 +742,90 @@ object Streams {
     * `statePartitions = |codebook|` fix, generalized to user-keyed
     * state where no cardinality bound exists but the source size is
     * known. NOT a core-count tune: the cap scales with the session's
-    * own shuffle setting, the numerator with the data.
+    * own shuffle setting, the numerator with the data. A zero or
+    * unknown size (an empty folder, a path the local listing cannot
+    * see) keeps the session default, never one partition.
     */
   def derivedStatePartitions(spark: SparkSession, sourceBytes: Long): Int = {
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cap.toLong,
-      (sourceBytes + math.max(1L, advisory) - 1) / math.max(1L, advisory)).toInt)
+    if (sourceBytes <= 0) cap
+    else {
+      val advisory = math.max(1L, org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")))
+      math.max(1, math.min(cap.toLong, (sourceBytes + advisory - 1) / advisory).toInt)
+    }
   }
 
-  /** Total bytes under a watched-folder source (driver-side listing —
-    * the same listing the file source itself performs per trigger). */
-  def dirBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(walk).sum
-      else f.length()
-    val root = new java.io.File(dir)
-    if (root.exists()) walk(root) else 0L
-  }
-
-  /** A session clone for HDFS-backed stateful streams with the state
-    * layout sized at stream birth ([[derivedStatePartitions]]) — the
-    * default-store twin of [[rocksDbSession]]: same re-registration of
-    * the engine's native rewrites (newSession() silently drops
-    * `experimental.extraOptimizations`, r15), no provider override.
+  /** Total bytes of a source file, or under a watched-folder source
+    * (driver-side listing — the same listing the file source itself
+    * performs per trigger); 0 when the path is absent or unlistable.
     */
-  def statefulSession(spark: SparkSession, statePartitions: Int): SparkSession = {
-    val s2 = spark.newSession()
-    graft.functions.GraftExtensions.register(s2)
-    s2.conf.set("spark.sql.shuffle.partitions",
-      math.max(1, statePartitions).toString)
-    s2
+  def sourceBytes(path: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
+      else f.length()
+    walk(new java.io.File(path))
   }
 
-  /** A session clone configured for RocksDB-backed streaming state —
-    * the one way every RocksDB stream here gets its session (r14;
-    * previously each call site duplicated the provider wiring). The
-    * clone keeps the parent's catalog/conf but scopes streaming-state
-    * settings away from the parent's other streams:
+  /** Where a streaming session keeps its keyed state: Spark's default
+    * HDFS-backed store, or RocksDB — the state-v2 backend, and the
+    * disk-backed store an unbounded-corpus admission state needs (heap
+    * stores OOM at 100 TB keyset sizes).
+    */
+  sealed trait Store
+  object Store {
+    case object Hdfs extends Store
+    case object RocksDb extends Store
+  }
+
+  /** The state-partition count a streaming session opens its state
+    * with: the parent's default, sized to the bytes of a source file or
+    * folder ([[derivedStatePartitions]]), or a known bound such as a
+    * codebook's size for cell-keyed state (at least 1: zero shuffle
+    * partitions fail every shuffle in the session, ADVICE r15).
+    */
+  sealed trait StatePartitions
+  object StatePartitions {
+    case object Default extends StatePartitions
+    final case class OfSource(path: String) extends StatePartitions
+    final case class Exactly(n: Int) extends StatePartitions
+  }
+
+  /** The one place a streaming session clone is made. The clone keeps
+    * the parent's catalog, conf and Catalyst extensions and scopes the
+    * stream's settings away from the parent's other queries:
     *
-    *  - provider = RocksDB (the state-v2 backend requirement, and the
-    *    disk-backed store an unbounded-corpus admission state needs —
-    *    heap stores OOM at 100 TB keyset sizes);
-    *  - changelog checkpointing ON: each micro-batch uploads the
-    *    batch's CHANGES instead of a full snapshot of every store
-    *    instance (snapshots still happen, async and infrequent) — at
-    *    production state sizes per-batch checkpoint cost tracks the
-    *    batch, not the accumulated state; exactly the contract the
-    *    rest of this file's per-batch-work arguments assume;
     *  - `statePartitions`: stateful-operator parallelism is FIXED at
     *    the stream's first checkpoint by the then-current shuffle
-    *    partition count — size it to expected state volume/throughput
-    *    here (the session-wide default is a batch-join setting, not a
+    *    partition count — size it to the state's data here (the
+    *    session-wide default is a batch-join setting, not a
     *    state-layout decision). Changing it later needs a fresh
-    *    checkpoint, so the knob matters at stream BIRTH.
+    *    checkpoint, so the setting matters at stream BIRTH;
+    *  - [[Store.RocksDb]] also turns changelog checkpointing ON: each
+    *    micro-batch uploads the batch's CHANGES instead of a full
+    *    snapshot of every store instance (snapshots still happen,
+    *    async and infrequent) — at production state sizes per-batch
+    *    checkpoint cost tracks the batch, not the accumulated state.
+    *    It fails fast unless the clone is [[stateV2Ready]].
     */
-  def rocksDbSession(spark: SparkSession,
-      statePartitions: Option[Int] = None): SparkSession = {
+  def session(spark: SparkSession, store: Store,
+      statePartitions: StatePartitions): SparkSession = {
+    val n = statePartitions match {
+      case StatePartitions.Default => None
+      case StatePartitions.OfSource(path) => Some(derivedStatePartitions(spark, sourceBytes(path)))
+      case StatePartitions.Exactly(k) => Some(math.max(1, k))
+    }
     val s2 = spark.newSession()
-    // newSession() builds a FRESH SessionState, which silently drops the
-    // parent's `experimental.extraOptimizations` — the engine's native
-    // rewrites (md5→graft_hash32, composed vector folds→graft_dot/
-    // graft_sqdist). Every RocksDB stream was paying interpreted
-    // higher-order folds per element (r15 GateProbe: q96's warm drain
-    // ~1.6 s slower than the closure twin q102 on identical work).
-    // Re-register on the clone so streaming plans get the same fused
-    // expressions as batch plans.
-    graft.functions.GraftExtensions.register(s2)
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s2.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    statePartitions.foreach(n => s2.conf.set("spark.sql.shuffle.partitions", n.toString))
+    n.foreach(k => s2.conf.set("spark.sql.shuffle.partitions", k.toString))
+    if (store == Store.RocksDb) {
+      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      s2.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      require(stateV2Ready(s2),
+        "RocksDB state needs Spark 4+ with the RocksDB state store provider")
+    }
     s2
   }
 

@@ -70,6 +70,9 @@ class ServiceSpec extends AnyFunSuite with SparkSupport {
     assert(engine.tick(now) == Seq(1))
     val copied = spark.read.parquet(s"$warehouseDir/regions_svc")
     assert(copied.count() == 5)
+    // every copied row carries the run's request time as its audit stamp
+    assert(copied.select("abfragezeitpunkt").distinct().collect()
+      .map(_.getAs[LocalDateTime](0)).toSeq == Seq(now))
 
     // tick mid-minute: the next slot (09:02:00) is out of the horizon
     now = LocalDateTime.of(2026, 3, 2, 9, 1, 10)

@@ -635,4 +635,13 @@ class WarehouseStatsSpec extends AnyFunSuite with SparkSupport {
     }
     assert(ex.getMessage.contains("does not exist"))
   }
+
+  test("concurrent rewrites with different schemas leave the schema memo equal to the files") {
+    val wh = new Warehouse(TempDirs.scratch("wh-memo-race"))
+    val frames = Seq(Seq((1L, "x")).toDF("id", "a"), Seq((1L, 2.0)).toDF("id", "b"))
+    frames.map(df => java.util.concurrent.CompletableFuture.runAsync(
+      () => (0 until 6).foreach(_ => wh.replace("t", df)))).foreach(_.join())
+    // read() plans with the memoized schema while the files match it
+    assert(wh.read(spark, "t").schema == spark.read.parquet(s"${wh.dir}/t").schema)
+  }
 }

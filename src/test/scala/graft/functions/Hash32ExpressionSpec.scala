@@ -13,8 +13,8 @@ import graft.testkit.{PropSupport, SparkSupport}
 class Hash32ExpressionSpec extends AnyFunSuite with SparkSupport with PropSupport {
 
   test("native graft_hash32 equals the composed md5-derived hash on arbitrary strings") {
-    GraftExtensions.register(spark)
-    import spark.implicits._
+    // on the reference clone, so the composed column stays composed
+    import composed.implicits._
     forAllSamples(Gen.listOfN(50, Gen.asciiPrintableStr), n = 4) { strings =>
       val df = (strings :+ "" :+ "äöü unicode ✓").toDF("s")
         .withColumn("composed", TextFunctions.hash32(col("s")))
@@ -24,7 +24,6 @@ class Hash32ExpressionSpec extends AnyFunSuite with SparkSupport with PropSuppor
   }
 
   test("the expression is codegen'd (no interpreted fallback) and registered in SQL") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // parquet-backed input: a literal Seq constant-folds into a
     // LocalTableScan before codegen ever runs
@@ -40,7 +39,6 @@ class Hash32ExpressionSpec extends AnyFunSuite with SparkSupport with PropSuppor
   }
 
   test("optimizer rule rewrites the composed md5 pattern to the native expression, results unchanged") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"text", TextFunctions.hash32($"text").as("h"))
@@ -52,10 +50,15 @@ class Hash32ExpressionSpec extends AnyFunSuite with SparkSupport with PropSuppor
         org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))
       assert(r.getLong(1) == expected)
     }
+    // the reference clone keeps the composed form, with equal values
+    val ref = composed.read.parquet(df.inputFiles: _*)
+      .select(col("text"), TextFunctions.hash32(col("text")).as("h"))
+    val refPlan = ref.queryExecution.optimizedPlan.toString()
+    assert(!refPlan.contains("graft_hash32") && refPlan.contains("md5"), refPlan)
+    assert(ref.collect().toSet == df.collect().toSet)
   }
 
   test("wrong arity surfaces a clear message, not builder internals (r10 review)") {
-    GraftExtensions.register(spark)
     val e1 = intercept[Exception] { spark.sql("SELECT graft_hash32()").collect() }
     assert(e1.getMessage.contains("requires exactly 1 argument"), e1.getMessage)
     val e2 = intercept[Exception] {
@@ -65,7 +68,6 @@ class Hash32ExpressionSpec extends AnyFunSuite with SparkSupport with PropSuppor
   }
 
   test("type check rejects non-string input") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     assertThrows[Exception] {
       Seq(1L).toDF("n").select(call_function("graft_hash32", $"n")).collect()

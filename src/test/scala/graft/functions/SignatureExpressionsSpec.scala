@@ -115,7 +115,9 @@ class SignatureExpressionsSpec extends AnyFunSuite with SparkSupport with PropSu
   }
 
   test("winnow kernels: gram hashes and window minima equal the composed stages (r15)") {
-    import spark.implicits._
+    // the composed gram hash is the md5 pattern Hash32Rewrite fuses: run
+    // on the reference clone so it stays composed
+    import composed.implicits._
     import org.apache.spark.sql.graftshim.ColumnBridge
     // gram hashes over docs of assorted lengths (>= k enforced upstream,
     // but include exactly-k and k+1 here)

@@ -15,17 +15,10 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
 
   import graft.functions.{VectorFunctions => V}
 
-  // a session with graft_dot + the fusion rule installed
-  private lazy val ext = {
-    val s = spark.newSession()
-    GraftExtensions.register(s)
-    s
-  }
-
   private def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   test("bit-identical to the composed aggregate(zip_with) fold, including fp order") {
-    import ext.implicits._
+    import composed.implicits._
     val df = Seq.tabulate(200) { i =>
       (Seq.tabulate(64)(d => math.sin(i * 64 + d) * (d + 1)),
         Seq.tabulate(64)(d => math.cos(i * 64 + d) / (d + 1)))
@@ -39,7 +32,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("null semantics match zip_with/aggregate: null element, null array, length mismatch") {
-    import ext.implicits._
+    import composed.implicits._
     val df = Seq(
       (Some(Seq[Option[Double]](Some(1.0), None)), Some(Seq[Option[Double]](Some(2.0), Some(3.0)))),
       (Some(Seq[Option[Double]](Some(1.0), Some(2.0))), None),
@@ -67,8 +60,8 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("rewrite rule fuses dot, norm, cosine and hyperplaneBucket compositions") {
-    import ext.implicits._
-    val df = rangeVecs(ext)
+    import spark.implicits._
+    val df = rangeVecs(spark)
     def optimized(c: Column): String =
       df.select(c.as("r")).queryExecution.optimizedPlan.toString
 
@@ -80,17 +73,10 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
     assert(cosinePlan.contains("graft_dot") && cosinePlan.contains("graft_sumsq"))
     assert(optimized(V.hyperplaneBucket($"a", 4, 8)).contains("graft_dot"))
 
-    // a session without the rule keeps the portable composition —
-    // extraOptimizations is SHARED across newSession(), so explicitly
-    // remove the rule for this assertion instead of relying on suite order
-    val vanillaDf = rangeVecs(spark)
-    val saved = spark.experimental.extraOptimizations
-    val vanilla =
-      try {
-        spark.experimental.extraOptimizations = saved.filterNot(_ == VectorFoldRewrite)
-        vanillaDf.select(V.dot(vanillaDf("a"), vanillaDf("b")).as("r"))
-          .queryExecution.optimizedPlan.toString
-      } finally spark.experimental.extraOptimizations = saved
+    // the reference clone, without the rule, keeps the portable composition
+    val vanillaDf = rangeVecs(composed)
+    val vanilla = vanillaDf.select(V.dot(vanillaDf("a"), vanillaDf("b")).as("r"))
+      .queryExecution.optimizedPlan.toString
     assert(!vanilla.contains("graft_dot"))
 
     // and the fused plan computes bit-identical values to the composed one
@@ -104,10 +90,10 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("SquaredL2 fuses IvfIndex.sqDist and is bit-identical to the composed fold") {
-    import ext.implicits._
+    import spark.implicits._
     import graft.operators.IvfIndex
     // rewrite fires on the (x-y)*(x-y) fold
-    val plan = rangeVecs(ext).select(IvfIndex.sqDist($"a", $"b").as("d"))
+    val plan = rangeVecs(spark).select(IvfIndex.sqDist($"a", $"b").as("d"))
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("graft_sqdist"), s"sqDist fold must fuse:\n$plan")
     // bit-exact vs a driver-side strict left fold in the same IEEE order
@@ -127,7 +113,7 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("AdcFold: value- and NULL-exact vs the composed adcScore fold (r15)") {
-    import ext.implicits._
+    import spark.implicits._
     import graft.operators.PqIndex
     // value parity on dense tables, bit-exact (same IEEE fold order)
     val df = Seq.tabulate(100) { i =>
@@ -168,24 +154,24 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
       oob.select(PqIndex.adcScore($"table", $"codes")).collect())
   }
 
-  test("newSession() drops experimental.extraOptimizations (the rocksDbSession re-register rationale)") {
-    // Sessions register the rewrites via experimental.extraOptimizations;
-    // a plain newSession() builds a FRESH SessionState with no parent, so
-    // the rules are gone unless the clone re-registers (r15 —
-    // Streams.rocksDbSession does). Pin the Spark behavior this relies
-    // on so an upgrade that changes it surfaces here, not as a silent
-    // perf cliff (or a redundant register call).
-    val parent = ext
-    assert(parent.experimental.extraOptimizations.contains(VectorFoldRewrite))
-    val clone = parent.newSession()
-    assert(!clone.experimental.extraOptimizations.contains(VectorFoldRewrite),
-      "newSession() now inherits extraOptimizations — rocksDbSession's " +
-        "re-register is redundant (harmless), update the r15 comments")
+  test("newSession() keeps the rules; excludedRules drops them") {
+    // the builder installs the rules as session extensions, which every
+    // clone inherits — the streaming clones rely on this — while the
+    // optimizer's excludedRules conf turns them off per session
+    val clone = spark.newSession()
+    def plan(s: org.apache.spark.sql.SparkSession): String = {
+      val df = rangeVecs(s)
+      df.select(V.dot(df("a"), df("b")).as("r")).queryExecution.optimizedPlan.toString
+    }
+    assert(plan(clone).contains("graft_dot"))
+    assert(clone.sql("SELECT graft_hash32('x')").head.getLong(0) ==
+      GraftHashUtil.hash32(org.apache.spark.unsafe.types.UTF8String.fromString("x")))
+    assert(!plan(composed).contains("graft_dot"))
   }
 
   test("codegen: the fused expressions stay in whole-stage codegen") {
-    import ext.implicits._
-    val q = rangeVecs(ext).select(V.norm($"a").as("n"), V.dot($"a", $"b").as("d"))
+    import spark.implicits._
+    val q = rangeVecs(spark).select(V.norm($"a").as("n"), V.dot($"a", $"b").as("d"))
       .filter($"n" > 0 && $"d" > 0)
     // the `*(n)` prefix marks a WholeStageCodegen stage in the simple
     // plan string; the fused expressions must sit INSIDE one

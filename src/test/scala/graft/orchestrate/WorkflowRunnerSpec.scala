@@ -148,6 +148,26 @@ class WorkflowRunnerSpec extends AnyFunSuite with SparkSupport {
     assert(!stepRows.head.erfolgreich)
   }
 
+  test("steps claiming one table never overlap in the ledger, with zero slack") {
+    val (_, wh, _, _) = fixture()
+    val ledger = new RunLedger(() => LocalDateTime.now())
+    val runner = new WorkflowRunner(new WorkflowManager, ledger, new Gates.ThreadCap(16),
+      new Gates.TableLocks, new Gates.ParallelLocks)
+    val steps = (1 to 16).map(i => StepSpec(7000L + i, CommandType.SqlTarget, TaskType.Sql,
+      "SELECT 1", zieltabelle = Some("shared_t"), schrittReihenfolge = i))
+    val spec = WorkflowSpec(7, 70, packages = Map(70L -> PackageSpec(70,
+      realizations = Seq(RealizationSpec(700, anzahlParalleleSchritte = 16, steps = steps)))))
+    (1 to 3).foreach(run => assert(runner.run(spec, run.toLong,
+      (m, id, _) => StepContext(spark, wh, ledger, m, schrittRunId = id)).success))
+    val windows = ledger.current.filter(_.level == RunLevel.Schritt)
+      .map(r => (r.ausfuehrungsstartzeitpunkt.get, r.ausfuehrungsendzeitpunkt.get))
+      .sortWith((x, y) => x._1.isBefore(y._1))
+    assert(windows.size == 48)
+    windows.sliding(2).foreach { case Seq(a, b) =>
+      assert(!b._1.isBefore(a._2), s"execution windows overlap: $a and $b")
+    }
+  }
+
   test("result report renders run header, module rows and error table (Helper.cs:606-1112)") {
     val (ledger, _, runner, mkCtx) = fixture()
     val spec = WorkflowSpec(
@@ -161,7 +181,7 @@ class WorkflowRunnerSpec extends AnyFunSuite with SparkSupport {
     assert(text.contains("FEHLGESCHLAGEN"))
     assert(text.contains("paketschritt"))
     assert(text.contains("[major]"))
-    val html = graft.report.MailReport.renderHtml(ledger, result.workflowRunId)
+    val html = graft.report.MailReport.renderHtml(text)
     assert(html.startsWith("<html>") && html.contains("FEHLGESCHLAGEN"))
   }
 

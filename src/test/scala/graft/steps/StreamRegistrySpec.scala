@@ -18,6 +18,11 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The RocksDB streaming session opens (Spark 4+ with the provider). */
+  private def stateV2Available: Boolean = scala.util.Try(graft.streaming.Streams.session(
+    spark, graft.streaming.Streams.Store.RocksDb,
+    graft.streaming.Streams.StatePartitions.Default)).isSuccess
+
   private def ctx(base: String): StepContext = StepContext(spark,
     new graft.catalog.Warehouse(s"$base/wh"), new graft.ledger.RunLedger(),
     graft.macros.Macros.Context(1L,
@@ -316,12 +321,7 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
   }
 
   test("semdedup_stream: 3-drain lifecycle — admission chain carries in RocksDB state across drains") {
-    assume(graft.streaming.Streams.stateV2Ready {
-      val probe = spark.newSession()
-      probe.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      probe
-    }, "state-v2 backend unavailable")
+    assume(stateV2Available, "state-v2 backend unavailable")
     import spark.implicits._
     val base = tmpDir("graft-sd-step")
     val c = ctx(base)
@@ -359,8 +359,7 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
   }
 
   test("semdedup_stream: statepartitions sizes the state layout at stream birth; parent session untouched") {
-    assume(graft.streaming.Streams.stateV2Ready(
-      graft.streaming.Streams.rocksDbSession(spark)), "state-v2 backend unavailable")
+    assume(stateV2Available, "state-v2 backend unavailable")
     import spark.implicits._
     val base = tmpDir("graft-sd-parts")
     val c = ctx(base)
@@ -520,12 +519,7 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
   }
 
   test("q118: the semdedup STREAM step accounts its admissions; a missing centroid table falls back") {
-    assume(graft.streaming.Streams.stateV2Ready {
-      val probe = spark.newSession()
-      probe.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      probe
-    }, "state-v2 backend unavailable")
+    assume(stateV2Available, "state-v2 backend unavailable")
     val (result, ledger, _, out) = EndToEnd.runSemdedupStreamWorkflow(spark, sf)
     assert(result.success && !result.fallbackRan && result.error.isEmpty)
     val admitted = spark.read.schema("vec_id BIGINT, cell BIGINT").parquet(out).count()

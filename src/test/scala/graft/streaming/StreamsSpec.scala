@@ -316,8 +316,9 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
+    // a zero (empty or unlistable) source says nothing: session default
+    assert(Streams.derivedStatePartitions(spark, 0L) == cap)
     // tiny source: one partition, never zero
-    assert(Streams.derivedStatePartitions(spark, 0L) == 1)
     assert(Streams.derivedStatePartitions(spark, 1L) == 1)
     assert(Streams.derivedStatePartitions(spark, advisory) == 1)
     assert(Streams.derivedStatePartitions(spark, advisory + 1) == math.min(2, cap))
@@ -325,9 +326,20 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
     assert(Streams.derivedStatePartitions(spark, advisory * (cap + 50L)) == cap)
     assert(Streams.derivedStatePartitions(spark, Long.MaxValue / 4) == cap)
     // the clone carries the bound and the parent keeps its own setting
-    val s2 = Streams.statefulSession(spark, 3)
+    val s2 = Streams.session(spark, Streams.Store.Hdfs, Streams.StatePartitions.Exactly(3))
     assert(s2.conf.get("spark.sql.shuffle.partitions") == "3")
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == cap)
+    assert(Streams.session(spark, Streams.Store.Hdfs, Streams.StatePartitions.Exactly(0))
+      .conf.get("spark.sql.shuffle.partitions") == "1")
+    // sizing reads a file's length or a folder's total; a missing source
+    // keeps the session default
+    val dir = tmpDir("graft-source-bytes")
+    new java.io.File(dir, "sub").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "sub", "b.bin"), new Array[Byte](5))
+    assert(Streams.sourceBytes(s"$dir/sub/b.bin") == 5L && Streams.sourceBytes(dir) == 5L)
+    def sized(path: String) = Streams.session(spark, Streams.Store.Hdfs,
+      Streams.StatePartitions.OfSource(path)).conf.get("spark.sql.shuffle.partitions").toInt
+    assert(sized(dir) == 1 && sized(s"$dir/missing") == cap)
   }
 
   test("windowedCounts: watermark closes windows, counts per type") {
@@ -415,9 +427,7 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
   test("sessionizeTws (state v2 / RocksDB): same sessions as the flatMapGroupsWithState path") {
     // a CLONED session carries the RocksDB provider conf so the shared
     // session's streaming gates keep their default HDFS-backed store
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s2 = Streams.session(spark, Streams.Store.RocksDb, Streams.StatePartitions.Default)
     assert(!Streams.stateV2Ready(spark), "default session must stay on the portable path")
     assert(Streams.stateV2Ready(s2))
     import s2.implicits._
@@ -527,10 +537,7 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
 
   test("semDedupStream: chain admission — rejected witness still witnesses, state crosses batches, cells isolate") {
     // state-v2 needs the RocksDB provider on a cloned session
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    assert(Streams.stateV2Ready(s2))
+    val s2 = Streams.session(spark, Streams.Store.RocksDb, Streams.StatePartitions.Default)
     import s2.implicits._
     implicit val sqlCtx = s2.sqlContext
     def unit(deg: Double): Seq[Double] =
@@ -562,9 +569,7 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
   }
 
   test("semDedupStream: a late lower id fails the query loudly (ordering contract enforced)") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s2 = Streams.session(spark, Streams.Store.RocksDb, Streams.StatePartitions.Default)
     import s2.implicits._
     implicit val sqlCtx = s2.sqlContext
     val input = MemoryStream[Streams.VecRow]

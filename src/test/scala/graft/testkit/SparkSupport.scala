@@ -3,7 +3,8 @@ package graft.testkit
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites (forked sbt test
-  * JVM). Small core count — these tests verify semantics, not throughput.
+  * JVM), with the production extensions. Small core count — these tests
+  * verify semantics, not throughput.
   */
 object SparkSupport {
   lazy val spark: SparkSession = {
@@ -11,10 +12,21 @@ object SparkSupport {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** [[spark]] without the native rewrite rules: the composed reference
+    * forms of the native kernels stay composed here, for parity specs. */
+  lazy val composed: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      Seq(graft.functions.Hash32Rewrite, graft.functions.VectorFoldRewrite)
+        .map(_.ruleName).mkString(","))
+    s
+  }
 }
 
 trait SparkSupport extends org.scalatest.BeforeAndAfterAll { this: org.scalatest.Suite =>
   lazy val spark: SparkSession = SparkSupport.spark
+  lazy val composed: SparkSession = SparkSupport.composed
 
   /** Registered with the global TempDirs registry, so the forked test
     * JVM's shutdown hook sweeps fixture dirs when the run ends. */
