@@ -552,7 +552,7 @@ object FanIn {
         val s2 = Streams.session(spark, Streams.Store.RocksDb, Streams.StatePartitions.Default)
         import s2.implicits._
         val base = java.nio.file.Files.createTempDirectory("fanin-q96").toString
-        val schema = s2.read.parquet(s"$outDir/embeddings.parquet").schema
+        val schema = graft.catalog.DriverParquet.schema(s2, s"$outDir/embeddings.parquet")
         val t2 = System.nanoTime()
         // (the gate's testdata ships embeddings.parquet as a single
         // FILE and glob-filters; FanIn's generated table is a parquet

@@ -6,7 +6,7 @@ import scala.concurrent.ExecutionContext
 
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.{ConfigAssembly, Tables, Warehouse}
+import graft.catalog.{ConfigAssembly, DriverParquet, Tables, Warehouse}
 import graft.ledger.RunLedger
 import graft.macros.Macros
 import graft.model._
@@ -37,7 +37,8 @@ object Service {
         */
       mailer: graft.report.Mailer = graft.report.Mailer.NoOp,
       /** Prior run's ledger dir: when set, [[start]] reloads the plan
-        * store and neutralizes stale open plans (`Worker.cs:45-51`).
+        * store, neutralizes stale open plans (`Worker.cs:45-51`) and
+        * continues the id sequence past every id persisted there.
         */
       restoreDir: Option[String] = None)(implicit ec: ExecutionContext) {
 
@@ -122,7 +123,11 @@ object Service {
   }
 
   /** Load the control-plane snapshot from a parquet config directory
-    * (one file per table, named like the model rows).
+    * (one file or part-file directory per table, named like the model
+    * rows). The tables are kilobytes: each is read on the driver by
+    * [[DriverParquet.table]] into a local DataFrame, so the whole load,
+    * backfill and collect included, runs no Spark job. A missing table,
+    * or one with no data files, loads empty.
     *
     * Snapshot-compat: Spark encoders do NOT apply case-class defaults,
     * so a pre-r10 snapshot whose parquet lacks a column added later
@@ -145,9 +150,9 @@ object Service {
       "umsetzung_schritte" -> Map("istAktiv" -> lit(true)))
     def load[T](name: String)(implicit enc: Encoder[T]): Seq[T] = {
       val p = s"$configDir/$name"
-      if (!new java.io.File(p).exists()) Seq.empty
+      if (DriverParquet.files(spark, p).isEmpty) Seq.empty
       else {
-        val raw = spark.read.parquet(p)
+        val raw = DriverParquet.table(spark, p)
         val have = raw.columns.toSet
         val defaults = columnDefaults.getOrElse(name, Map.empty)
         val cols = enc.schema.fields.map { f =>

@@ -43,47 +43,18 @@ object Tables {
     }
   }
 
-  /** Footer schema of a single-file parquet table, memoized on the
-    * file's (length, mtime) (r16): resolving `spark.read.parquet` runs
-    * footer inference per call — one driver job per table per gate
-    * ([[registerAll]] alone paid ten). The corpus files are immutable
-    * within a run, and a swapped file changes the fingerprint and
-    * re-infers — the same validated-metadata discipline as the
-    * warehouse's stats/schema memos. Non-file paths (directory tables)
-    * skip the memo and infer as before.
-    */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
-
-  private def footerSchema(spark: SparkSession, path: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val f = new java.io.File(path)
-    if (!f.isFile) None
-    else {
-      val key = (f.length(), f.lastModified())
-      val hit = schemaMemo.get(path)
-      if (hit != null && hit._1 == key) Some(hit._2)
-      else {
-        val s = spark.read.parquet(path).schema
-        schemaMemo.put(path, (key, s))
-        Some(s)
-      }
-    }
-  }
-
   /** All tables load as the parquet footer declares, except the events
-    * timestamp normalization above.
+    * timestamp normalization above. The schema is read on the driver
+    * ([[DriverParquet.schema]]) and declared to the reader, so resolving
+    * a table runs no schema-inference job.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    val df = footerSchema(spark, p) match {
-      case Some(s) => spark.read.schema(s).parquet(p)
-      case None => spark.read.parquet(p)
-    }
+    val df = spark.read.schema(DriverParquet.schema(spark, p)).parquet(p)
     if (name == "events") normalizeEventsTs(df) else df
   }
 
-  /** The events table as a STREAM, ts-normalized: batch-sniffed schema
+  /** The events table as a STREAM, ts-normalized: the footer schema
     * (readStream needs one declared), the single-file glob, and
     * [[normalizeEventsTs]] in one place — the routing the streaming
     * gates must not each re-implement (the r10 testdata regeneration
@@ -91,17 +62,14 @@ object Tables {
     * future gate copying a pre-r10 version from history would regress
     * it again).
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = footerSchema(spark, s"$dir/events.parquet")
-      .getOrElse(spark.read.parquet(s"$dir/events.parquet").schema)
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     normalizeEventsTs(
-      spark.readStream.schema(schema)
+      spark.readStream.schema(DriverParquet.schema(spark, s"$dir/events.parquet"))
         .option("pathGlobFilter", "events.parquet").parquet(dir))
-  }
 
   /** Register every table as a temp view so `spark.sql` text (SQL_TARGET /
     * SQL_SOURCE steps, report views) resolves the same names the DuckDB
-    * oracle sees.
+    * oracle sees. Runs no Spark job: ten footer reads on the driver.
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))

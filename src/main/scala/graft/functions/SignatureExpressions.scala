@@ -360,7 +360,8 @@ case class SpanStarts(child: Expression, n: Int) extends UnaryExpression {
   *
   * PRECONDITION: cuts sorted ascending by cut_start (the operator sorts
   * via array_sort; gaps-and-islands additionally makes them disjoint —
-  * the walk stays correct under overlap, the spec pins both). Parity
+  * the walk stays correct under overlap, the spec pins both). Unsorted
+  * cuts throw `SignatureKernels.UnsortedCutsException`. Parity
   * (asserted in SignatureExpressionsSpec): NULL cuts array passes `t`
   * through verbatim; NULL `t` is NULL; NULL tokens at uncovered
   * positions survive (filter's lambda sees them, the position test
@@ -641,9 +642,18 @@ object SignatureKernels {
     new GenericArrayData(out)
   }
 
+  /** Thrown by [[exciseByIntervals]] on cuts not sorted by start, which
+    * its walk would silently mis-excise.
+    */
+  final class UnsortedCutsException(message: String)
+    extends IllegalArgumentException(message)
+
   /** One merged pointer walk over tokens and sorted cut intervals;
     * composed-form parity and the sorted-by-start precondition
-    * documented on [[ExciseByIntervals]].
+    * documented on [[ExciseByIntervals]]. The walk checks the
+    * precondition as it passes each cut, and passes the cuts left after
+    * the last token too, so unsorted cuts always throw
+    * [[UnsortedCutsException]] instead of returning a wrong array.
     */
   def exciseByIntervals(toks: ArrayData, cuts: ArrayData,
       startIsLong: Boolean, endIsLong: Boolean): ArrayData = {
@@ -653,22 +663,40 @@ object SignatureKernels {
       if (startIsLong) r.getLong(0) else r.getInt(0).toLong
     def endOf(r: InternalRow): Long =
       if (endIsLong) r.getLong(1) else r.getInt(1).toLong
+    // the start of the last non-NULL cut passed, checked for order
+    def passed(j: Int, last: Long): Long =
+      if (cuts.isNullAt(j)) last
+      else {
+        val start = startOf(cuts.getStruct(j, 2))
+        if (start < last) throw new UnsortedCutsException(
+          s"graft_excise: cut ${j + 1} starts at $start, before the previous cut's " +
+            s"start $last; cuts must be sorted by cut_start")
+        start
+      }
     val out = new Array[AnyRef](m)
     var k = 0
     var j = 0
+    var last = Long.MinValue
     var i = 0
     while (i < m) {
       val pos = (i + 1).toLong
       // a cut whose end is behind pos can never cover this or any later
       // position (cuts sorted by start; see class doc for the overlap
       // argument); NULL cut elements (unreachable) are skipped the same way
-      while (j < nc && (cuts.isNullAt(j) || endOf(cuts.getStruct(j, 2)) < pos)) j += 1
+      while (j < nc && (cuts.isNullAt(j) || endOf(cuts.getStruct(j, 2)) < pos)) {
+        last = passed(j, last)
+        j += 1
+      }
       val covered = j < nc && startOf(cuts.getStruct(j, 2)) <= pos
       if (!covered) {
         out(k) = if (toks.isNullAt(i)) null else toks.getUTF8String(i)
         k += 1
       }
       i += 1
+    }
+    while (j < nc) {
+      last = passed(j, last)
+      j += 1
     }
     new GenericArrayData(
       if (k == m) out else java.util.Arrays.copyOfRange(out, 0, k))

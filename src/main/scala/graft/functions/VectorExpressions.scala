@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, EvalMode, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Native Catalyst fold over two double arrays — the codegen'd fast
   * path of `VectorFunctions.dot` (and, via `DotProduct(a, a)`, of the
@@ -217,7 +217,8 @@ case class SquaredL2(left: Expression, right: Expression)
   * index throws under ANSI (`failOnError`, captured at construction
   * like ElementAt) and yields NULL otherwise; index 0 throws; a code
   * whose +1 exceeds int range throws under ANSI like the composed
-  * `(c+1).cast("int")` and wraps like the non-ANSI cast otherwise
+  * `(c+1).cast("int")`, with the same `CAST_OVERFLOW` error class, and
+  * wraps like the non-ANSI cast otherwise
   * (ADVICE r15 — unreachable for real PQ codes ≤ 255).
   */
 case class AdcFold(left: Expression, right: Expression,
@@ -232,7 +233,7 @@ case class AdcFold(left: Expression, right: Expression,
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(ArrayType(DoubleType, _), _),
-            ArrayType(org.apache.spark.sql.types.LongType, _)) =>
+            ArrayType(LongType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
         s"graft_adc expects (array<array<double>>, array<bigint>), got " +
@@ -258,11 +259,13 @@ case class AdcFold(left: Expression, right: Expression,
         val inner = t.getArray(i)
         val raw = c.getLong(i) + 1L
         // the composed form's (c+1).cast("int") under ANSI throws on
-        // overflow where .toInt silently wraps (ADVICE r15) — match it;
-        // non-ANSI cast wraps exactly like .toInt, so only ANSI changes
+        // overflow where .toInt silently wraps (ADVICE r15) — match it,
+        // error class (CAST_OVERFLOW) included, by running that ANSI cast
+        // (the error's builder is private to Spark's Scala packages; the
+        // generated code below calls it directly); non-ANSI cast wraps
+        // exactly like .toInt, so only ANSI changes
         if (failOnError && (raw > Int.MaxValue || raw < Int.MinValue))
-          throw new ArithmeticException(
-            s"Casting $raw to int causes overflow")
+          Cast(Literal(raw), IntegerType, None, EvalMode.ANSI).eval()
         val idx = raw.toInt
         if (idx == 0) throw new IllegalArgumentException(
           "element_at: SQL array indices start at 1")
@@ -310,7 +313,9 @@ case class AdcFold(left: Expression, right: Expression,
          |    org.apache.spark.sql.catalyst.util.ArrayData $inner = $t.getArray($i);
          |    final long $raw = $c.getLong($i) + 1L;
          |    if ($failOnError && ($raw > Integer.MAX_VALUE || $raw < Integer.MIN_VALUE)) {
-         |      throw new ArithmeticException("Casting " + $raw + " to int causes overflow");
+         |      throw org.apache.spark.sql.errors.QueryExecutionErrors.castingCauseOverflowError(
+         |        java.lang.Long.valueOf($raw), org.apache.spark.sql.types.LongType$$.MODULE$$,
+         |        org.apache.spark.sql.types.IntegerType$$.MODULE$$);
          |    }
          |    final int $idx = (int) $raw;
          |    if ($idx == 0) {

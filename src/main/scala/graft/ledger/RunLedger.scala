@@ -8,7 +8,9 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.catalog.DriverParquet
 import graft.model._
 
 /** The run ledger — the reference's real "output" (SURVEY §1.2): one row
@@ -153,8 +155,13 @@ final class RunLedger(clock: () => LocalDateTime = () => LocalDateTime.now()) {
 
   /** Reload persisted plan state (service restart — the reference's
     * plans live in MSSQL so they survive the process; ours re-seed from
-    * the persisted parquet). Also advances the id sequence past every
-    * reloaded id.
+    * the persisted parquet) and advance the id sequence past every id
+    * already persisted under `dir`: plans and the appended run rows,
+    * messages, errors and queries of every earlier life, which share the
+    * one sequence (past plan ids alone, a second life would reissue the
+    * first life's run ids, and the persisted history would merge two
+    * runs under one id). Reads on the driver ([[DriverParquet]]), no
+    * Spark job; returns the number of plans reloaded.
     */
   def restorePlans(spark: SparkSession, dir: String): Int = {
     val path = s"$dir/zeitplan_ausfuehrungen"
@@ -167,16 +174,25 @@ final class RunLedger(clock: () => LocalDateTime = () => LocalDateTime.now()) {
     // calculus either way, matching Worker.cs semantics.
     def tryRead(p: String): Option[Array[PlanRow]] =
       try {
-        if (new java.io.File(p).exists()) Some(spark.read.parquet(p).as[PlanRow].collect())
+        if (DriverParquet.files(spark, p).nonEmpty)
+          Some(DriverParquet.table(spark, p).as[PlanRow].collect())
         else None
       } catch { case scala.util.control.NonFatal(_) => None }
     val rows = tryRead(path)
       .orElse(tryRead(s"${path}__snapshot"))
       .orElse(tryRead(s"${path}__old"))
       .getOrElse(Array.empty[PlanRow])
+    // the tables [[persist]] appends; an unreadable one fails the start
+    // loudly rather than let this life reissue its ids
+    val idOnly = Some(StructType(Seq(StructField("id", LongType))))
+    val persistedIds = Seq("run_events", "meldungen", "fehlermeldungen", "sql_anfragen").flatMap { t =>
+      val p = s"$dir/$t"
+      if (DriverParquet.files(spark, p).isEmpty) Nil
+      else DriverParquet.rows(spark, p, idOnly).map(_.getLong(0))
+    }
     synchronized {
       rows.foreach(p => plans(p.id) = p)
-      val maxId = (plans.keys ++ Seq(0L)).max
+      val maxId = (plans.keys ++ persistedIds ++ Seq(0L)).max
       while (nextId.get() <= maxId) nextId.incrementAndGet()
       rows.length
     }

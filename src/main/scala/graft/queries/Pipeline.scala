@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.catalog.Tables
+import graft.catalog.{DriverParquet, Tables}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Training-data-pipeline operators over `documents` / `embeddings` — the
@@ -688,7 +688,7 @@ object Pipeline {
       val s2 = graft.streaming.Streams.session(s, graft.streaming.Streams.Store.Hdfs,
         graft.streaming.Streams.StatePartitions.OfSource(s"$dir/documents.parquet"))
       import s2.implicits._
-      val schema = s2.read.parquet(s"$dir/documents.parquet").schema
+      val schema = DriverParquet.schema(s2, s"$dir/documents.parquet")
       // the stream source wants a DIRECTORY; the sf dir + a glob filter
       // selects the single documents file (testdata tables are one file)
       val stream = s2.readStream.schema(schema)
@@ -727,7 +727,7 @@ object Pipeline {
     (s, dir) => {
       import s.implicits._
       val base = graft.util.TempDirs.scratch("q49stream")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = DriverParquet.schema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.catalog.Tables
+import graft.catalog.{DriverParquet, Tables}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Data-SELECTION gates (r11): the published corpus-selection recipes a
@@ -320,7 +320,7 @@ object Selection {
         graft.streaming.Streams.StatePartitions.Exactly(cents.size))
       import s2.implicits._
       val base = graft.util.TempDirs.scratch("q96stream")
-      val schema = s2.read.parquet(s"$dir/embeddings.parquet").schema
+      val schema = DriverParquet.schema(s2, s"$dir/embeddings.parquet")
       val stream = s2.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         .withColumn("e", V.asDouble($"embedding"))
@@ -401,7 +401,7 @@ object Selection {
       import s2.implicits._
       val base = graft.util.TempDirs.scratch("q102stream")
       val assign = graft.operators.SemDeDup.assignCellFunc(cents)
-      val schema = s2.read.parquet(s"$dir/embeddings.parquet").schema
+      val schema = DriverParquet.schema(s2, s"$dir/embeddings.parquet")
       val stream = s2.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         .withColumn("e", V.asDouble($"embedding"))
@@ -469,7 +469,7 @@ object Selection {
       // explode, one agg, one bounded collect
       val weights = graft.operators.Dsir.weightMap(docs(s, dir), "doc_id", "text",
         targetPred = col("lang") === "en", buckets = 8192L, scale = 1000000L)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = DriverParquet.schema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       val q = graft.streaming.Streams.dsirScoreStream(stream, weights)

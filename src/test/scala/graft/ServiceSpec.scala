@@ -206,6 +206,32 @@ class ServiceSpec extends AnyFunSuite with SparkSupport {
     assert(wfRun.zeitplanAusfuehrungenId.contains(fresh.id))
   }
 
+  test("run ids stay unique across service lives sharing one ledger dir") {
+    val configDir = tmpDir("svc-lives-cfg")
+    val ledgerDir = tmpDir("svc-lives-ledger")
+    writeConfig(configDir)
+    val cfg = Service.loadConfig(spark, configDir)
+    // two lives wired as Service.main wires them: restore from and
+    // persist to the same ledger dir, each running one workflow
+    Seq(LocalDateTime.of(2026, 3, 2, 9, 0, 55), LocalDateTime.of(2026, 3, 2, 10, 0, 55))
+      .zipWithIndex.foreach { case (now, life) =>
+        val e = new Service.Engine(spark, "/root/testdata/sf0.001", tmpDir(s"svc-lives-wh$life"),
+          cfg, Map(1 -> 100), clock = () => now, restoreDir = Some(ledgerDir))
+        e.start()
+        assert(e.tick(now) == Seq(1))
+        e.shutdown(Some(ledgerDir))
+      }
+    val events = spark.read.parquet(s"$ledgerDir/run_events")
+    assert(events.filter("level = 'workflow'").count() > 0)
+    // each (id, seq) is one version of one run row
+    assert(events.select("id", "seq").distinct().count() == events.count(),
+      "a later life reissued an earlier life's run ids")
+    val messages = spark.read.parquet(s"$ledgerDir/meldungen")
+    assert(messages.select("id").distinct().count() == messages.count())
+    // and the two tables share the sequence without overlap
+    assert(events.select("id").intersect(messages.select("id")).isEmpty)
+  }
+
   test("plan-store snapshot survives a heartbeat crash: torn write falls back to the renamed-aside previous snapshot") {
     import graft.ledger.RunLedger
     val dir = tmpDir("svc-torn-snapshot")

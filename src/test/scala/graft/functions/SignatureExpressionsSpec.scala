@@ -216,6 +216,38 @@ class SignatureExpressionsSpec extends AnyFunSuite with SparkSupport with PropSu
     assert(nl.isNullAt(0) && nl.isNullAt(1))
   }
 
+  test("exciseByIntervals: unsorted cuts throw UnsortedCutsException") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    import org.apache.spark.unsafe.types.UTF8String
+    def toks(n: Int) = new GenericArrayData(
+      Array.tabulate[Any](n)(i => UTF8String.fromString(s"w$i")))
+    def cuts(cs: Option[(Long, Long)]*) = new GenericArrayData(cs.map {
+      case Some((a, b)) => new GenericInternalRow(Array[Any](a, b))
+      case None => null
+    }.toArray[Any])
+    def excise(n: Int, cs: Option[(Long, Long)]*) =
+      SignatureKernels.exciseByIntervals(toks(n), cuts(cs: _*), startIsLong = true, endIsLong = true)
+    // out of order where the walk passes it: cut (1,2) would be missed
+    intercept[SignatureKernels.UnsortedCutsException](
+      excise(10, Some((5L, 6L)), Some((1L, 2L))))
+    // out of order behind the first cut the walk stops at (the tokens
+    // end inside the first cut): found in the pass after the last token
+    intercept[SignatureKernels.UnsortedCutsException](
+      excise(3, Some((2L, 20L)), Some((25L, 26L)), Some((21L, 22L))))
+    // equal starts and a NULL element between sorted cuts are fine
+    assert(excise(6, Some((2L, 3L)), None, Some((2L, 2L)), Some((5L, 5L))).numElements() == 3)
+    // through the expression: the task fails with the named error
+    val df = Seq((Seq("a", "b", "c"), Seq((3, 3), (1, 1)))).toDF("t", "raw")
+      .selectExpr("t", "transform(raw, c -> struct(c._1 as cut_start, c._2 as cut_end)) as cuts")
+    val e = intercept[Throwable](df.select(ColumnBridge.column(ExciseByIntervals(
+      ColumnBridge.expression($"t"), ColumnBridge.expression($"cuts")))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[SignatureKernels.UnsortedCutsException]), e)
+  }
+
   test("codegen smoke: kernels execute inside a filtered projection over range data") {
     import spark.implicits._
     val df = spark.range(1, 200).select(

@@ -154,6 +154,33 @@ class VectorExpressionsSpec extends AnyFunSuite with SparkSupport {
       oob.select(PqIndex.adcScore($"table", $"codes")).collect())
   }
 
+  test("AdcFold: a code past int range raises the composed form's CAST_OVERFLOW under ANSI") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.PqIndex
+    assert(spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val code = Int.MaxValue.toLong + 5L
+    // the error class the first SparkThrowable in the cause chain carries
+    def condition(df: DataFrame): String = {
+      val e = intercept[Throwable](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: org.apache.spark.SparkThrowable => t.getCondition }
+        .getOrElse(fail(s"no SparkThrowable in the cause chain of $e", e))
+    }
+    // a local relation evaluates on the driver (interpreted eval); a
+    // range runs the generated code — both paths must match
+    val local = Seq((Seq(Seq(1.0, 2.0)), Seq(code))).toDF("table", "codes")
+    val ranged = spark.range(1).select(
+      org.apache.spark.sql.functions.array(org.apache.spark.sql.functions.array(
+        org.apache.spark.sql.functions.lit(1.0), org.apache.spark.sql.functions.lit(2.0)))
+        .as("table"),
+      org.apache.spark.sql.functions.array(org.apache.spark.sql.functions.lit(code)).as("codes"))
+    Seq(local, ranged).foreach { df =>
+      assert(condition(df.select(PqIndex.composedAdcScore($"table", $"codes"))) == "CAST_OVERFLOW")
+      assert(condition(df.select(PqIndex.adcScore($"table", $"codes"))) == "CAST_OVERFLOW")
+    }
+  }
+
   test("newSession() keeps the rules; excludedRules drops them") {
     // the builder installs the rules as session extensions, which every
     // clone inherits — the streaming clones rely on this — while the
