@@ -429,25 +429,12 @@ object FanIn {
     {
       val docsDf = spark.read.parquet(s"$outDir/documents.parquet")
       def measure(label: String, stringKeys: Boolean): (Long, Double) = {
-        val bytes = new java.util.concurrent.atomic.AtomicLong()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
+        val trace = graft.util.Jobs.Trace(spark)
         val t0 = System.nanoTime()
         graft.operators.ExactSubstr.profileManaged(docsDf, n = 8,
           stringKeys = stringKeys)(_.queryExecution.toRdd.count())
         val secs = (System.nanoTime() - t0) / 1e9
-        // the listener bus is async; give it a moment to drain before
-        // reading the accumulated task metrics (probe tolerance, not a
-        // correctness path)
-        Thread.sleep(2000)
-        spark.sparkContext.removeSparkListener(listener)
-        (bytes.get(), secs)
+        try (trace.drain().shuffleWriteBytes, secs) finally trace.close()
       }
       val (strBytes, strS) = measure("string", stringKeys = true)
       val (hashBytes, hashS) = measure("hash128", stringKeys = false)
@@ -853,9 +840,10 @@ object FanIn {
     // window partitions the PACKS frame by a hash of the pack key, so
     // occupancy is uniform BY CONSTRUCTION even when one source holds
     // 80% of the corpus — the Zipf stratum that serializes a
-    // per-source window (SkewProbe, FANIN r13 top section) cannot
-    // recur. Measured: max/mean packs per shard on the 80%-hot corpus,
-    // plus the wall of the full placement (window + join back).
+    // per-source window (FANIN.md "r13: the per-source window family
+    // de-skewed") cannot recur. Measured: max/mean packs per shard on
+    // the 80%-hot corpus, plus the wall of the full placement (window +
+    // join back).
     locally {
       val nPacks = 20000L * mult // one row per pack, worst case 1 doc/pack
       val packed = spark.range(nPacks).select(

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import scala.collection.mutable
+import graft.util.Jobs
 
 /** Per-gate forensic probe (r15 optimization round): run ONE registered
   * query end to end with a job listener and print where the wall went —
@@ -14,12 +13,13 @@ import scala.collection.mutable
   * Usage: GATE_PROBE=q130_neardup_pruned_streaming[,q96_...] \
   *   java ... graft.GateProbe   (env SPARK_GRAFT_SF_DIR, default sf0.1;
   *   REPS via GATE_PROBE_REPS, default 2 — rep 1 is warm-up, the last
-  *   rep is the reported one)
+  *   rep is the reported one). GATE_PROBE_PLANS=<dir> also writes each
+  *   gate's `explain("formatted")`, taken before its last rep executes,
+  *   to `<dir>/<gate>.txt` (the plan evidence in plans/rNN). Building the
+  *   DataFrame of a lifecycle gate runs its workflow, so the dumped plan
+  *   is the gate's RESULT read.
   */
 object GateProbe {
-  final case class Job(id: Int, start: Long, var end: Long = -1L,
-      desc: String = "", site: String = "", stages: String = "")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val raw = sys.env.getOrElse("GATE_PROBE", "q130_neardup_pruned_streaming")
@@ -28,124 +28,91 @@ object GateProbe {
       if (compact) SparkEntry.queries.keys.toArray.sorted
       else raw.split(',').map(_.trim).filter(_.nonEmpty)
     val reps = sys.env.get("GATE_PROBE_REPS").flatMap(_.toIntOption).getOrElse(2)
+    val plans = sys.env.get("GATE_PROBE_PLANS").map(java.nio.file.Paths.get(_))
+    plans.foreach(java.nio.file.Files.createDirectories(_))
     val spark = Sessions.local()
-    val jobs = mutable.ArrayBuffer.empty[Job]
-    // contention-robust structural metrics: bytes don't inflate under a
-    // busy box the way wall does
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val nTasks = new java.util.concurrent.atomic.AtomicLong
-    val taskListener = new SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          taskMs.addAndGet(m.executorRunTime)
-          nTasks.incrementAndGet()
-          ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(taskListener)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        // per-job stage anatomy (r16 forensics): the leaf stage's name is
-        // the operator that submitted the job (broadcast build, shuffle
-        // map, write, collect), which the stream-level callSite hides
-        val stages = e.stageInfos.map(s =>
-          s"${s.name.takeWhile(_ != '(').trim}:${s.numTasks}").mkString("+")
-        jobs += Job(e.jobId, e.time, desc = desc, site = site, stages = stages)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.find(_.id == e.jobId).foreach(_.end = e.time)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // contention-robust structural metrics ride along: bytes don't
+    // inflate under a busy box the way wall does
+    val trace = Jobs.Trace(spark)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { rep =>
-        jobs.synchronized(jobs.clear())
-        shufWrite.set(0); shufRead.set(0); taskMs.set(0); nTasks.set(0)
+        // settle the previous rep's events first, or a warm-up rep's late
+        // job or task end lands in the reported rep
+        trace.drain().reset()
         spark.catalog.clearCache()
         graft.operators.BookCache.clear()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        val wallMs = (System.nanoTime() - t0) / 1e6
+        val df = fn(spark, sfDir)
+        val built = System.nanoTime()
+        if (rep == reps) plans.foreach { dir =>
+          val txt = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          val out = dir.resolve(s"$name.txt")
+          java.nio.file.Files.writeString(out, txt)
+          println(s"wrote $out (${txt.length} chars)")
+        }
+        // the plan dump stays out of the wall
+        val t1 = System.nanoTime()
+        df.queryExecution.toRdd.count()
+        val wallMs = (built - t0 + System.nanoTime() - t1) / 1e6
         spark.catalog.clearCache()
         graft.operators.BookCache.clear()
         // sweep only after the gate's last rep (q20 memoizes its
         // warehouse per session+dir and re-reads it on later reps)
-        if (rep == reps) graft.util.TempDirs.sweep()
-        if (rep == reps && compact) {
-          Thread.sleep(200)
-          val js = jobs.synchronized(jobs.toVector).sortBy(_.start)
-          val done = js.filter(_.end > 0)
-          val ivs = done.map(j => (j.start, j.end)).sortBy(_._1)
-          var covered = 0L; var curS = -1L; var curE = -1L
-          ivs.foreach { case (s, e) =>
-            if (curE < 0) { curS = s; curE = e }
-            else if (s <= curE) { curE = math.max(curE, e) }
-            else { covered += curE - curS; curS = s; curE = e }
-          }
-          if (curE >= 0) covered += curE - curS
-          println(f"GATE $name%-42s wall=${wallMs / 1000}%6.2f jobs=${js.size}%3d " +
-            f"covered=${covered / 1e3}%6.2f gap=${(wallMs - covered) / 1e3}%6.2f " +
-            f"tasks=${nTasks.get}%4d taskSec=${taskMs.get / 1e3}%7.2f " +
-            f"shufW=${shufWrite.get / 1048576.0}%8.2fMiB shufR=${shufRead.get / 1048576.0}%8.2fMiB")
-        } else if (rep == reps) {
-          // settle: async job-end events
-          Thread.sleep(300)
-          val js = jobs.synchronized(jobs.toVector).sortBy(_.start)
-          val done = js.filter(_.end > 0)
-          // union of job intervals → covered wall (jobs can overlap)
-          val ivs = done.map(j => (j.start, j.end)).sortBy(_._1)
-          var covered = 0L
-          var curS = -1L; var curE = -1L
-          ivs.foreach { case (s, e) =>
-            if (curE < 0) { curS = s; curE = e }
-            else if (s <= curE) { curE = math.max(curE, e) }
-            else { covered += curE - curS; curS = s; curE = e }
-          }
-          if (curE >= 0) covered += curE - curS
-          println(f"== $name rep$rep wall=${wallMs / 1000}%.2fs jobs=${js.size} " +
-            f"job-covered=${covered / 1e3}%.2fs driver-gap=${(wallMs - covered) / 1e3}%.2fs " +
-            f"tasks=${nTasks.get} taskSec=${taskMs.get / 1e3}%.2f " +
-            f"shufW=${shufWrite.get / 1048576.0}%.2fMiB shufR=${shufRead.get / 1048576.0}%.2fMiB")
-          val detail = sys.env.contains("GATE_PROBE_SITES")
-          val bySite = done.groupBy(j =>
-            if (j.desc.startsWith("nd-admit") || j.desc.startsWith("phase:"))
-              (if (detail) j.desc.linesIterator.next() + " @ " + j.site
-               else j.desc.linesIterator.next())
-            else j.site)
-            .map { case (k, v) => (k, v.map(j => j.end - j.start).sum, v.size) }
-            .toSeq.sortBy(-_._2)
-          bySite.take(30).foreach { case (k, ms, n) =>
-            println(f"   ${ms / 1e3}%7.2fs  n=$n%-4d $k")
-          }
-          // full per-job dump (GATE_PROBE_JOBS=1): id, duration, desc,
-          // stage anatomy — the job-level forensics the grouped view hides
-          if (sys.env.contains("GATE_PROBE_JOBS")) done.foreach { j =>
-            println(f"   job ${j.id}%3d ${(j.end - j.start) / 1e3}%6.2fs " +
-              f"[${j.desc.linesIterator.toSeq.headOption.getOrElse("")}] ${j.stages}")
-          }
-          // driver-gap attribution: the widest gaps between consecutive
-          // jobs, labeled by the job that FOLLOWS the gap (its planning/
-          // listing/footer work is what filled it)
-          val gaps = done.sliding(2).collect { case Seq(a2, b2)
-            if b2.start > a2.end => (b2.start - a2.end, b2.site) }.toSeq
-          println("   -- widest driver gaps (ms before job at site) --")
-          gaps.sortBy(-_._1).take(12).foreach { case (ms, s) =>
-            println(f"   gap ${ms}%5d ms -> $s")
-          }
+        if (rep == reps) {
+          graft.util.TempDirs.sweep()
+          report(name, rep, wallMs, trace.drain(), compact)
         }
       }
     }
+    trace.close()
     spark.stop()
+  }
+
+  private def report(name: String, rep: Int, wallMs: Double, trace: Jobs.Trace,
+      compact: Boolean): Unit = {
+    val js = trace.jobs
+    val covered = trace.coveredMs
+    if (compact) {
+      println(f"GATE $name%-42s wall=${wallMs / 1000}%6.2f jobs=${js.size}%3d " +
+        f"covered=${covered / 1e3}%6.2f gap=${(wallMs - covered) / 1e3}%6.2f " +
+        f"tasks=${trace.tasks}%4d taskSec=${trace.taskMs / 1e3}%7.2f " +
+        f"shufW=${trace.shuffleWriteBytes / 1048576.0}%8.2fMiB " +
+        f"shufR=${trace.shuffleReadBytes / 1048576.0}%8.2fMiB")
+      return
+    }
+    val done = js.filter(_.end > 0)
+    println(f"== $name rep$rep wall=${wallMs / 1000}%.2fs jobs=${js.size} " +
+      f"job-covered=${covered / 1e3}%.2fs driver-gap=${(wallMs - covered) / 1e3}%.2fs " +
+      f"tasks=${trace.tasks} taskSec=${trace.taskMs / 1e3}%.2f " +
+      f"shufW=${trace.shuffleWriteBytes / 1048576.0}%.2fMiB " +
+      f"shufR=${trace.shuffleReadBytes / 1048576.0}%.2fMiB")
+    val detail = sys.env.contains("GATE_PROBE_SITES")
+    val bySite = done.groupBy(j =>
+      if (j.desc.startsWith("nd-admit") || j.desc.startsWith("phase:"))
+        (if (detail) j.desc.linesIterator.next() + " @ " + j.site
+         else j.desc.linesIterator.next())
+      else j.site)
+      .map { case (k, v) => (k, v.map(j => j.end - j.start).sum, v.size) }
+      .toSeq.sortBy(-_._2)
+    bySite.take(30).foreach { case (k, ms, n) =>
+      println(f"   ${ms / 1e3}%7.2fs  n=$n%-4d $k")
+    }
+    // full per-job dump (GATE_PROBE_JOBS=1): id, duration, desc,
+    // stage anatomy — the job-level forensics the grouped view hides
+    if (sys.env.contains("GATE_PROBE_JOBS")) done.foreach { j =>
+      println(f"   job ${j.id}%3d ${(j.end - j.start) / 1e3}%6.2fs " +
+        f"[${j.desc.linesIterator.toSeq.headOption.getOrElse("")}] ${j.stages}")
+    }
+    // driver-gap attribution: the widest gaps between consecutive
+    // jobs, labeled by the job that FOLLOWS the gap (its planning/
+    // listing/footer work is what filled it)
+    val gaps = done.sliding(2).collect { case Seq(a, b)
+      if b.start > a.end => (b.start - a.end, b.site) }.toSeq
+    println("   -- widest driver gaps (ms before job at site) --")
+    gaps.sortBy(-_._1).take(12).foreach { case (ms, s) =>
+      println(f"   gap ${ms}%5d ms -> $s")
+    }
   }
 }

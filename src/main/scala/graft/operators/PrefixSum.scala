@@ -30,8 +30,9 @@ import graft.functions.RankBuckets
   *
   * The join and the within-bucket window share the (key, bucket) hash
   * partitioning, so the corpus shuffles ONCE — same as the naive plan —
-  * but the hot stratum now spreads over numBuckets tasks (SkewProbe,
-  * FANIN.md r13: the 80%-one-source wall collapses). Values are
+  * but the hot stratum now spreads over numBuckets tasks (FANIN.md "r13:
+  * the per-source window family de-skewed": the 80%-one-source wall
+  * collapses). Values are
   * restricted to integral types: long addition is associative, so the
   * bucketed sum is bit-identical to the global window's, which is what
   * lets q61/q82/q86/q99/q103 keep their DuckDB oracles verbatim.

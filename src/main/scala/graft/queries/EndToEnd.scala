@@ -30,6 +30,24 @@ object EndToEnd {
   private val FixedClock = LocalDateTime.of(2026, 2, 1, 12, 0, 0)
   private val CopyFilter = "l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'"
 
+  /** Run `spec` through the orchestrator the way every lifecycle gate
+    * does: a fresh ledger, a warehouse at `whDir`, an 8-step cap with
+    * table and Parallelsperre locks, all at the fixed clock.
+    */
+  private def runWorkflow(s: SparkSession, whDir: String, spec: WorkflowSpec,
+      zeitplanAusfuehrungenId: Long): (WorkflowResult, RunLedger, Warehouse) = {
+    val ledger = new RunLedger(() => FixedClock)
+    val wh = new Warehouse(whDir)
+    val runner = new WorkflowRunner(
+      new WorkflowManager, ledger, new Gates.ThreadCap(8),
+      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
+    val result = runner.run(spec, zeitplanAusfuehrungenId,
+      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
+        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
+          konfigurationenId = real.konfigurationenId))
+    (result, ledger, wh)
+  }
+
   /** One slice execution per (session, sf-dir): q20 verifies the
     * written data, q21 the ledger of the SAME run — memoized so the
     * pair measures one workflow execution plus two independent
@@ -43,12 +61,6 @@ object EndToEnd {
 
   private def runSliceUncached(spark: SparkSession, dir: String): (RunLedger, Warehouse) = {
     Tables.registerAll(spark, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(
-      graft.util.TempDirs.scratch("graft-e2e"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
     val view = s"li_src_${System.nanoTime()}"
     val spec = WorkflowSpec(
       id = 1, masterPackageId = 10,
@@ -64,10 +76,8 @@ object EndToEnd {
             StepSpec(1001, CommandType.Copy, TaskType.Sql,
               s"SELECT * FROM $view",
               zieltabelle = Some("lineitem_copy"), schrittReihenfolge = 2)))))))
-    val result = runner.run(spec, zeitplanAusfuehrungenId = 7,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(spark, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
+    val (result, ledger, wh) = runWorkflow(spark, graft.util.TempDirs.scratch("graft-e2e"),
+      spec, zeitplanAusfuehrungenId = 7)
     result.error.foreach(throw _)
     (ledger, wh)
   }
@@ -149,12 +159,6 @@ object EndToEnd {
     "q36_timeslice_e2e",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(
-        graft.util.TempDirs.scratch("graft-e2e-ts"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
       val spec = WorkflowSpec(
         id = 2, masterPackageId = 20,
         takeover = Takeover.Config(
@@ -166,10 +170,8 @@ object EndToEnd {
             "SELECT l_orderkey, l_extendedprice, l_shipdate FROM lineitem " +
               "WHERE l_shipdate BETWEEN ##Uebernahme_von## AND ##Uebernahme_bis##",
             zieltabelle = Some("li_sliced"), zeitscheibe = true)))))))
-      val result = runner.run(spec, zeitplanAusfuehrungenId = 8,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(spark = s, warehouse = wh, ledger = ledger, macroCtx = m,
-            schrittRunId = stepRunId, konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-e2e-ts"),
+        spec, zeitplanAusfuehrungenId = 8)
       result.error.foreach(throw _)
       wh.read(s, "li_sliced")
         .groupBy(date_trunc("month", col("l_shipdate")).cast("timestamp_ntz").as("slice_from"))
@@ -343,18 +345,10 @@ object EndToEnd {
   private[graft] def runCurationWorkflow(s: SparkSession, dir: String,
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(graft.util.TempDirs.scratch("graft-cur-wf"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
     val view = s"cur_src_${System.nanoTime()}"
-    val result = runner.run(curationWorkflowSpec(view, induceFailure),
-      zeitplanAusfuehrungenId = 9,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+    runWorkflow(s, graft.util.TempDirs.scratch("graft-cur-wf"),
+      curationWorkflowSpec(view, induceFailure),
+      zeitplanAusfuehrungenId = 9)
   }
 
   /** The curation pipeline run AS a workflow (r12, VERDICT next #1):
@@ -550,18 +544,10 @@ object EndToEnd {
   private[graft] def runNeardupWorkflow(s: SparkSession, dir: String,
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(graft.util.TempDirs.scratch("graft-nd-wf"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
     val view = s"nd_src_${System.nanoTime()}"
-    val result = runner.run(neardupWorkflowSpec(view, induceFailure),
-      zeitplanAusfuehrungenId = 10,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+    runWorkflow(s, graft.util.TempDirs.scratch("graft-nd-wf"),
+      neardupWorkflowSpec(view, induceFailure),
+      zeitplanAusfuehrungenId = 10)
   }
 
   /** Near-dup dedup run AS a workflow (r13, VERDICT next #3): q88's
@@ -672,30 +658,14 @@ object EndToEnd {
     fp.createOrReplaceTempView(fpView)
     // two arrival files, strictly increasing mtimes (the q105 ordering
     // contract: the file source drains oldest-first)
-    def writeArrival(n: Int, slice: Long, mtime: Long): Unit = {
-      val tmp = s"$base/tmp$n"
-      fp.filter(pmod(col("doc_id"), lit(4L)) === slice).coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/in/batch$n.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(mtime), s"could not order arrival file $n")
-    }
+    def writeArrival(n: Int, slice: Long, mtime: Long): Unit =
+      graft.util.TempDirs.dropParquet(fp.filter(pmod(col("doc_id"), lit(4L)) === slice),
+        s"$base/in/batch$n.parquet", Some(mtime))
     writeArrival(1, 0L, 1700000000000L)
     writeArrival(2, 3L, 1700000100000L)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(s"$base/wh")
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(
+    runWorkflow(s, s"$base/wh",
       streamWorkflowSpec(fpView, s"$base/in", s"$base/ckpt", induceFailure),
-      zeitplanAusfuehrungenId = 11,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+      zeitplanAusfuehrungenId = 11)
   }
 
   /** Streaming ingest run AS a workflow (r13, VERDICT next #4): the
@@ -793,16 +763,8 @@ object EndToEnd {
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse, String) = {
     Tables.registerAll(s, dir)
     val whDir = graft.util.TempDirs.scratch("graft-mt-wf")
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(whDir)
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(maintenanceWorkflowSpec(induceFailure),
-      zeitplanAusfuehrungenId = 12,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
+    val (result, ledger, wh) = runWorkflow(s, whDir,
+      maintenanceWorkflowSpec(induceFailure), zeitplanAusfuehrungenId = 12)
     (result, ledger, wh, whDir)
   }
 
@@ -890,18 +852,10 @@ object EndToEnd {
   private[graft] def runAnnWorkflow(s: SparkSession, dir: String,
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(graft.util.TempDirs.scratch("graft-ann-wf"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
     val view = s"ann_src_${System.nanoTime()}"
-    val result = runner.run(annWorkflowSpec(view, induceFailure),
-      zeitplanAusfuehrungenId = 13,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+    runWorkflow(s, graft.util.TempDirs.scratch("graft-ann-wf"),
+      annWorkflowSpec(view, induceFailure),
+      zeitplanAusfuehrungenId = 13)
   }
 
   /** ANN index lifecycle AS a workflow (r13): k-means training, corpus
@@ -1032,17 +986,9 @@ object EndToEnd {
   private[graft] def runAssemblyWorkflow(s: SparkSession, dir: String,
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(graft.util.TempDirs.scratch("graft-as-wf"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(assemblyWorkflowSpec(induceFailure),
-      zeitplanAusfuehrungenId = 14,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+    runWorkflow(s, graft.util.TempDirs.scratch("graft-as-wf"),
+      assemblyWorkflowSpec(induceFailure),
+      zeitplanAusfuehrungenId = 14)
   }
 
   /** Training-set assembly AS a workflow (r13): budget take, hash
@@ -1182,17 +1128,9 @@ object EndToEnd {
   private[graft] def runPrunedReadWorkflow(s: SparkSession, dir: String,
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(graft.util.TempDirs.scratch("graft-pr-wf"))
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(prunedReadWorkflowSpec(induceFailure),
-      zeitplanAusfuehrungenId = 15,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+    runWorkflow(s, graft.util.TempDirs.scratch("graft-pr-wf"),
+      prunedReadWorkflowSpec(induceFailure),
+      zeitplanAusfuehrungenId = 15)
   }
 
   /** Manifest-pruned reads AS a workflow step (r14, VERDICT r13
@@ -1269,27 +1207,12 @@ object EndToEnd {
     // ONE arrival file = ONE data batch (+ the no-data flush batch), the
     // q55 emission contract the oracle reproduces; ts pre-normalized by
     // Tables.load so both testdata generations stream identically
-    val tmp = s"$base/tmp"
-    Tables.load(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"), col("value"))
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(s"$base/in/events1.parquet")
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(s"$base/wh")
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(
+    graft.util.TempDirs.dropParquet(Tables.load(s, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type"), col("value")),
+      s"$base/in/events1.parquet", None)
+    runWorkflow(s, s"$base/wh",
       sessionStreamWorkflowSpec(s"$base/in", s"$base/ckpt", s"$base/out", induceFailure),
-      zeitplanAusfuehrungenId = 16,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+      zeitplanAusfuehrungenId = 16)
   }
 
   /** Stateful sessionization AS a workflow stream step, composed with a
@@ -1385,27 +1308,13 @@ object EndToEnd {
     val base = graft.util.TempDirs.scratch("graft-sd-wf")
     // ONE id-ordered arrival file = the operator's ordering contract
     // met by construction (ids non-decreasing across micro-batches)
-    val tmp = s"$base/tmp"
-    s.table("embeddings")
+    graft.util.TempDirs.dropParquet(s.table("embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .orderBy(col("vec_id"))
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(s"$base/in/vecs1.parquet")
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(s"$base/wh")
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(
+      .orderBy(col("vec_id")),
+      s"$base/in/vecs1.parquet", None)
+    val (result, ledger, wh) = runWorkflow(s, s"$base/wh",
       semdedupStreamWorkflowSpec(s"$base/in", s"$base/ckpt", s"$base/out", induceFailure),
-      zeitplanAusfuehrungenId = 17,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
+      zeitplanAusfuehrungenId = 17)
     (result, ledger, wh, s"$base/out")
   }
 
@@ -1495,27 +1404,12 @@ object EndToEnd {
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
     val base = graft.util.TempDirs.scratch("graft-wc-wf")
-    val tmp = s"$base/tmp"
-    Tables.load(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"), col("value"))
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(s"$base/in/events1.parquet")
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(s"$base/wh")
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(
+    graft.util.TempDirs.dropParquet(Tables.load(s, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type"), col("value")),
+      s"$base/in/events1.parquet", None)
+    runWorkflow(s, s"$base/wh",
       windowedCountsWorkflowSpec(s"$base/in", s"$base/ckpt", s"$base/out", induceFailure),
-      zeitplanAusfuehrungenId = 18,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+      zeitplanAusfuehrungenId = 18)
   }
 
   /** Watermarked windowed counts AS a workflow stream step with a batch
@@ -1603,27 +1497,12 @@ object EndToEnd {
       induceFailure: Boolean = false): (graft.orchestrate.WorkflowResult, RunLedger, Warehouse) = {
     Tables.registerAll(s, dir)
     val base = graft.util.TempDirs.scratch("graft-dw-wf")
-    val tmp = s"$base/tmp"
-    Tables.load(s, dir, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .coalesce(1).write.parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(s"$base/in/docs1.parquet")
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    val ledger = new RunLedger(() => FixedClock)
-    val wh = new Warehouse(s"$base/wh")
-    val runner = new WorkflowRunner(
-      new WorkflowManager, ledger, new Gates.ThreadCap(8),
-      new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-    val result = runner.run(
+    graft.util.TempDirs.dropParquet(Tables.load(s, dir, "documents")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text")),
+      s"$base/in/docs1.parquet", None)
+    runWorkflow(s, s"$base/wh",
       dsirStreamWorkflowSpec(s"$base/in", s"$base/ckpt", s"$base/out", induceFailure),
-      zeitplanAusfuehrungenId = 19,
-      (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-        StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-          konfigurationenId = real.konfigurationenId))
-    (result, ledger, wh)
+      zeitplanAusfuehrungenId = 19)
   }
 
   /** Streaming DSIR scoring AS a workflow with table-fed LM and a
@@ -1724,16 +1603,8 @@ object EndToEnd {
     "q121_retention_workflow",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-rt-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-      val result = runner.run(retentionWorkflowSpec(),
-        zeitplanAusfuehrungenId = 17,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-rt-wf"),
+        retentionWorkflowSpec(), zeitplanAusfuehrungenId = 17)
       result.error.foreach(throw _)
       wh.read(s, "rt_lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -1801,11 +1672,6 @@ object EndToEnd {
     "q124_neardup_lifecycle",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-nd2-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
       val tag = s"nd2_${System.nanoTime()}"
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_hist AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 IN (2, 3)")
@@ -1813,12 +1679,9 @@ object EndToEnd {
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 1")
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_b2 AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0")
-      val result = runner.run(
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-nd2-wf"),
         neardupLifecycleSpec(s"${tag}_hist", s"${tag}_b1", s"${tag}_b2"),
-        zeitplanAusfuehrungenId = 20,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+        zeitplanAusfuehrungenId = 20)
       result.error.foreach(throw _)
       wh.read(s, "nd2_adm1")
         .select(lit(1L).as("batch"), col("doc_id"), col("n_hist_candidates"))
@@ -1941,16 +1804,8 @@ object EndToEnd {
     "q125_temporal_layout_workflow",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-pr2-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-      val result = runner.run(temporalLayoutWorkflowSpec(),
-        zeitplanAusfuehrungenId = 21,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-pr2-wf"),
+        temporalLayoutWorkflowSpec(), zeitplanAusfuehrungenId = 21)
       result.error.foreach(throw _)
       wh.read(s, "pr2_slice")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
@@ -2019,22 +1874,13 @@ object EndToEnd {
     "q126_pruned_admission_workflow",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-nd4-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
       val tag = s"nd4_${System.nanoTime()}"
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_hist AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0")
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_batch AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0")
-      val result = runner.run(
-        prunedAdmissionWorkflowSpec(s"${tag}_hist", s"${tag}_batch"),
-        zeitplanAusfuehrungenId = 22,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-nd4-wf"),
+        prunedAdmissionWorkflowSpec(s"${tag}_hist", s"${tag}_batch"), zeitplanAusfuehrungenId = 22)
       result.error.foreach(throw _)
       wh.read(s, "nd4_adm").select(col("doc_id"), col("n_hist_candidates"))
     },
@@ -2122,29 +1968,14 @@ object EndToEnd {
       docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
         .createOrReplaceTempView(seedView)
       // two arrival files, strictly increasing mtimes (oldest-first drain)
-      def writeArrival(n: Int, residue: Long, mtime: Long): Unit = {
-        val tmp = s"$base/tmp$n"
-        docs.filter(col("doc_id") % 4 === residue).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(s"$base/in/batch$n.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        require(dst.setLastModified(mtime), s"could not order arrival file $n")
-      }
+      def writeArrival(n: Int, residue: Long, mtime: Long): Unit =
+        graft.util.TempDirs.dropParquet(docs.filter(col("doc_id") % 4 === residue),
+          s"$base/in/batch$n.parquet", Some(mtime))
       writeArrival(1, 1L, 1700000000000L)
       writeArrival(2, 0L, 1700000100000L)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(s"$base/wh")
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-      val result = runner.run(
+      val (result, _, wh) = runWorkflow(s, s"$base/wh",
         neardupStreamWorkflowSpec(seedView, s"$base/in", s"$base/ckpt"),
-        zeitplanAusfuehrungenId = 23,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+        zeitplanAusfuehrungenId = 23)
       result.error.foreach(throw _)
       wh.read(s, "nd5_admitted")
         .select(col("batch"), col("doc_id"), col("n_hist_candidates"))
@@ -2255,22 +2086,13 @@ object EndToEnd {
     "q128_neardup_retention",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-nd6-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
       val tag = s"nd6_${System.nanoTime()}"
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_hist AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0")
       s.sql(s"CREATE OR REPLACE TEMP VIEW ${tag}_batch AS " +
         "SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0")
-      val result = runner.run(
-        neardupRetentionWorkflowSpec(s"${tag}_hist", s"${tag}_batch"),
-        zeitplanAusfuehrungenId = 24,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-nd6-wf"),
+        neardupRetentionWorkflowSpec(s"${tag}_hist", s"${tag}_batch"), zeitplanAusfuehrungenId = 24)
       result.error.foreach(throw _)
       wh.read(s, "nd6_adm1")
         .select(lit(1L).as("round"), col("doc_id"), col("n_hist_candidates"))
@@ -2395,16 +2217,8 @@ object EndToEnd {
     "q129_bloom_retention",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(graft.util.TempDirs.scratch("graft-nd7-wf"))
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-      val result = runner.run(bloomRetentionWorkflowSpec(),
-        zeitplanAusfuehrungenId = 25,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+      val (result, _, wh) = runWorkflow(s, graft.util.TempDirs.scratch("graft-nd7-wf"),
+        bloomRetentionWorkflowSpec(), zeitplanAusfuehrungenId = 25)
       result.error.foreach(throw _)
       wh.read(s, "nd7_adm1")
         .select(lit(1L).as("round"), col("l_partkey"))
@@ -2433,7 +2247,8 @@ object EndToEnd {
     * invariant). Unmanifested bootstrap tables make the pruned planner
     * fall back to full filtered scans, so rows are identical to q127 by
     * construction — which is exactly what the shared oracle pins; the
-    * manifested-pruning evidence is q126's and NearDupProbe's.
+    * manifested-pruning evidence is q126's and FANIN.md's "q123/q124
+    * admission scale probe".
     */
   private[graft] def neardupPrunedStreamWorkflowSpec(seedView: String,
       inDir: String, ckptDir: String): WorkflowSpec = WorkflowSpec(
@@ -2465,29 +2280,14 @@ object EndToEnd {
       val seedView = s"nd8_seed_${System.nanoTime()}"
       docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
         .createOrReplaceTempView(seedView)
-      def writeArrival(n: Int, residue: Long, mtime: Long): Unit = {
-        val tmp = s"$base/tmp$n"
-        docs.filter(col("doc_id") % 4 === residue).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(s"$base/in/batch$n.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        require(dst.setLastModified(mtime), s"could not order arrival file $n")
-      }
+      def writeArrival(n: Int, residue: Long, mtime: Long): Unit =
+        graft.util.TempDirs.dropParquet(docs.filter(col("doc_id") % 4 === residue),
+          s"$base/in/batch$n.parquet", Some(mtime))
       writeArrival(1, 1L, 1700000000000L)
       writeArrival(2, 0L, 1700000100000L)
-      val ledger = new RunLedger(() => FixedClock)
-      val wh = new Warehouse(s"$base/wh")
-      val runner = new WorkflowRunner(
-        new WorkflowManager, ledger, new Gates.ThreadCap(8),
-        new Gates.TableLocks, new Gates.ParallelLocks, clock = () => FixedClock)
-      val result = runner.run(
+      val (result, _, wh) = runWorkflow(s, s"$base/wh",
         neardupPrunedStreamWorkflowSpec(seedView, s"$base/in", s"$base/ckpt"),
-        zeitplanAusfuehrungenId = 26,
-        (m: Macros.Context, stepRunId: Option[Long], real: RealizationSpec) =>
-          StepContext(s, wh, ledger, m, schrittRunId = stepRunId,
-            konfigurationenId = real.konfigurationenId))
+        zeitplanAusfuehrungenId = 26)
       result.error.foreach(throw _)
       wh.read(s, "nd8_admitted")
         .select(col("batch"), col("doc_id"), col("n_hist_candidates"))

@@ -2159,16 +2159,9 @@ object Pipeline {
         .select($"doc_id", T.fingerprintMd5($"text").as("fingerprint"))
       // two arrival files with strictly increasing mtimes — the file
       // source drains oldest-first, which IS the ordering contract
-      def writeArrival(n: Int, slice: Long, mtime: Long): Unit = {
-        val tmp = s"$base/tmp$n"
-        fp.filter(pmod($"doc_id", lit(4L)) === slice).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(s"$base/in/batch$n.parquet")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        require(dst.setLastModified(mtime), s"could not order arrival file $n")
-      }
+      def writeArrival(n: Int, slice: Long, mtime: Long): Unit =
+        graft.util.TempDirs.dropParquet(fp.filter(pmod($"doc_id", lit(4L)) === slice),
+          s"$base/in/batch$n.parquet", Some(mtime))
       writeArrival(1, 0L, 1700000000000L)
       writeArrival(2, 3L, 1700000100000L)
       val wh = new graft.catalog.Warehouse(s"$base/wh")

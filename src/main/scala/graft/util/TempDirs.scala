@@ -3,6 +3,8 @@ package graft.util
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.sql.DataFrame
+
 /** A registry of scratch directories swept in one shot. Instantiable so
   * tests can exercise the lifecycle without touching the global
   * [[TempDirs]] registry mid-run (suites share one session, and e2e
@@ -75,4 +77,27 @@ class DirRegistry {
   */
 object TempDirs extends DirRegistry {
   Runtime.getRuntime.addShutdownHook(new Thread(() => { sweep(); () }))
+
+  /** A single-file write that did not leave exactly one parquet part. */
+  final class PartCountException(dir: String, parts: Seq[String])
+      extends IllegalStateException(
+        s"expected exactly one parquet part in $dir, found ${parts.size}: ${parts.mkString(", ")}")
+
+  /** Drop `df` into a folder as ONE parquet file at `dst`, the way an
+    * upstream system delivers an arrival file: one partition written to a
+    * scratch dir, its part file moved to `dst` (parent folders created).
+    * `mtime` (epoch ms) sets the file's modification time, which orders
+    * arrivals for a file source that drains oldest-first.
+    */
+  def dropParquet(df: DataFrame, dst: String, mtime: Option[Long]): Unit = {
+    val tmp = s"${scratch("drop")}/out"
+    df.coalesce(1).write.parquet(tmp)
+    val parts = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+    if (parts.size != 1) throw new PartCountException(tmp, parts.map(_.getName))
+    val out = new java.io.File(dst)
+    out.getParentFile.mkdirs()
+    Files.move(parts.head.toPath, out.toPath)
+    mtime.foreach(t => require(out.setLastModified(t), s"could not set the mtime of $dst"))
+  }
 }

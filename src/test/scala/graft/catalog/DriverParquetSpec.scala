@@ -2,9 +2,6 @@ package graft.catalog
 
 import java.time.LocalDateTime
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.Service
 import graft.model._
 import graft.testkit.SparkSupport
+import graft.util.Jobs
 
 /** The driver-side parquet reader: it must see what `spark.read.parquet`
   * sees (listing, schema, rows) without running a Spark job, and the
@@ -20,32 +18,6 @@ import graft.testkit.SparkSupport
 class DriverParquetSpec extends AnyFunSuite with SparkSupport {
 
   private val testdata = "/root/testdata/sf0.001"
-
-  /** Jobs `body` starts on this thread. They carry a job group; a later
-    * sentinel job's start shows the async listener bus has delivered
-    * every earlier event, so the count is exact, not a sleep's guess.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id"))); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("driver-parquet-probe", "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("driver-parquet-sentinel", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("driver-parquet-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("driver-parquet-sentinel"), "sentinel job never reported")
-      groups.asScala.count(_ == "driver-parquet-probe")
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def multiset(rows: Seq[Row]): Map[Seq[Any], Int] =
     rows.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
@@ -65,14 +37,22 @@ class DriverParquetSpec extends AnyFunSuite with SparkSupport {
     Seq(KonfigurationsparameterRow("Anzahl_ETL_Threads", "3"))
       .toDS().write.parquet(s"$dir/konfigurationsparameter")
 
-    // the probe counts: the inference job of a plain read shows up
-    assert(jobsOf(spark.read.parquet(s"$dir/workflows").schema) >= 1)
-
+    // jobs this thread starts in the probe group, counted exactly: the
+    // trace drains the async listener bus before it is read
+    val group = "driver-parquet-probe"
+    val probe = Jobs.Trace(spark, Some(group))
     var cfg: ConfigSet = null
-    assert(jobsOf {
-      cfg = Service.loadConfig(spark, dir)
-      Tables.registerAll(spark, testdata)
-    } == 0)
+    try {
+      // the probe counts: the inference job of a plain read shows up
+      Jobs.grouped(spark, group)(spark.read.parquet(s"$dir/workflows").schema)
+      assert(probe.drain().jobs.nonEmpty)
+      probe.reset()
+      Jobs.grouped(spark, group) {
+        cfg = Service.loadConfig(spark, dir)
+        Tables.registerAll(spark, testdata)
+      }
+      assert(probe.drain().jobs.isEmpty)
+    } finally probe.close()
     assert(cfg.workflows.map(_.etlWorkflowId) == Seq(1))
     assert(cfg.workflows.head.uebernahmeVon.contains(LocalDateTime.of(1990, 1, 1, 0, 0)))
     assert(cfg.paketUmsetzungen.size == 1 && cfg.paketUmsetzungen.forall(_.istAktiv))

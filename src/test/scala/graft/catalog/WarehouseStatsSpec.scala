@@ -11,7 +11,7 @@ import graft.macros.Macros
 import graft.operators.ZOrder
 import graft.steps.{CommandType, StepContext, Steps, StepSpec, TaskType}
 import graft.testkit.SparkSupport
-import graft.util.TempDirs
+import graft.util.{Jobs, TempDirs}
 
 /** Scheduling semantics of the persisted stats manifest (r13):
   * `Warehouse.refreshStats` + `statsPrunedRead`. The VALUES under any
@@ -185,23 +185,18 @@ class WarehouseStatsSpec extends AnyFunSuite with SparkSupport {
     val (wh, xmax, _) = freshLayout()
     val (lo, hi) = (xmax / 4, xmax / 4 + xmax / 8)
     // warm: the refresh seeded the memo; this call must already plan
-    // without a manifest collect job — count jobs around it
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
+    // without a manifest collect job — count jobs around it, after the
+    // listener bus has drained
     val warm = wh.statsPrunedScan(spark, "t", Seq(("x", lo, hi)))
     assert(warm.scheduled > 0 && warm.scheduled < warm.total)
-    spark.sparkContext.addSparkListener(listener)
+    val trace = Jobs.Trace(spark)
     try {
       val again = wh.statsPrunedScan(spark, "t", Seq(("x", lo, hi)))
       assert(again.scheduled == warm.scheduled && again.total == warm.total)
-      Thread.sleep(300) // listener bus is async; job starts are immediate
-      assert(jobs.get == 0,
-        s"planning against an unchanged manifest must run no jobs, ran ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val jobs = trace.drain().jobs
+      assert(jobs.isEmpty,
+        s"planning against an unchanged manifest must run no jobs, ran ${jobs.size}")
+    } finally trace.close()
     // staleness: an EXTERNAL writer (second Warehouse instance on the
     // same dir) swaps in a manifest whose envelopes exclude the range —
     // the fingerprint (fresh part-file names/mtimes) must force a

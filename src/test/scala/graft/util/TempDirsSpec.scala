@@ -4,11 +4,39 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testkit.SparkSupport
+
 /** Exercises a private DirRegistry instance, NOT the global TempDirs —
   * sweeping the global registry mid-run would delete scratch dirs the
   * shared-session e2e gates still read through their memoized caches.
+  * `dropParquet` writes through the shared session into global scratch
+  * dirs, which the test JVM's shutdown hook sweeps.
   */
-class TempDirsSpec extends AnyFunSuite {
+class TempDirsSpec extends AnyFunSuite with SparkSupport {
+
+  test("dropParquet delivers one parquet file with the given mtime") {
+    val base = tmpDir("tempdirs-drop")
+    val df = spark.range(0, 50, 1, 4).toDF("id")
+    TempDirs.dropParquet(df, s"$base/in/batch1.parquet", Some(1700000000000L))
+    TempDirs.dropParquet(df.filter("id < 5"), s"$base/in/batch2.parquet", None)
+    val in = Paths.get(base, "in")
+    assert(Files.list(in).toArray.map(_.toString.split('/').last).sorted.toSeq ==
+      Seq("batch1.parquet", "batch2.parquet"))
+    assert(Files.getLastModifiedTime(in.resolve("batch1.parquet")).toMillis == 1700000000000L)
+    assert(spark.read.parquet(s"$base/in/batch1.parquet").count() == 50L)
+    assert(spark.read.parquet(s"$base/in").count() == 55L)
+  }
+
+  test("dropParquet names the fault when a write leaves more than one part") {
+    val split = spark.newSession()
+    split.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    val base = tmpDir("tempdirs-drop-split")
+    val e = intercept[TempDirs.PartCountException] {
+      TempDirs.dropParquet(split.range(3).toDF("id"), s"$base/in/x.parquet", None)
+    }
+    assert(e.getMessage.contains("found 3"))
+    assert(!Files.exists(Paths.get(base, "in")))
+  }
 
   test("scratch registers a dir that sweep removes recursively (VERDICT r7 item 5)") {
     val reg = new DirRegistry

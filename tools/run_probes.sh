@@ -27,8 +27,3 @@ FANIN_MULT="$FMULT" FANIN_E2E=0 SPARK_GRAFT_CPUS=16 \
 echo "== graft.RelScale x$RMULT =="
 REL_MULT="$RMULT" SPARK_GRAFT_CPUS=16 \
   java $OPENS -Xmx8g -Dspark.ui.enabled=false -cp "$CP" graft.RelScale
-echo "== graft.BloomProbe x$FMULT =="
-# per-batch shuffle bytes must stay FLAT across historic-keyset sizes
-# (r14 — the confirm-direction claim; FANIN.md r14 records the x100 pass)
-BLOOM_MULT="$FMULT" SPARK_GRAFT_CPUS=16 \
-  java $OPENS -Xmx8g -Dspark.ui.enabled=false -cp "$CP" graft.BloomProbe
