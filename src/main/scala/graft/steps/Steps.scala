@@ -219,11 +219,12 @@ object Steps {
         s"$n envelopes over ${cols.size} columns"
       // delete_where predicate="<SQL boolean over the table's columns>"
       // — the RETENTION verb (Delta's DELETE as maintenance): rows
-      // matching the predicate are dropped through the crash-safe
-      // rewrite, and a stats manifest is re-collected with the rewrite
-      // (Warehouse.deleteWhere remanifest=true) so pruned reads keep
-      // their quality. The one maintenance action that changes CONTENTS
-      // by design; a no-match predicate is a metadata-sized probe.
+      // matching the predicate go through the crash-safe swap, file by
+      // file from footer statistics (files dropped whole, carried, or
+      // rewritten — the message logs the counts), and a stats manifest
+      // is brought up to date with the swap (Warehouse.deleteWhere
+      // remanifest=true) so pruned reads keep their quality. The one
+      // maintenance action that changes CONTENTS by design.
       //
       // delete_where range="col=lo..hi" (r14) — the MANIFEST-PLANNED
       // retention form (Warehouse.deleteWhereRange): on a manifested
@@ -244,17 +245,18 @@ object Steps {
               s"delete_where on `$table` deletes one column range per step " +
                 s"(got ${ranges.size}: $spec)")
             val (c, lo, hi) = ranges.head
-            if (ctx.warehouse.deleteWhereRange(ctx.spark, table, c, lo, hi,
-                remanifest = true))
-              s"deleted rows with `$c` in [$spec]"
-            else s"no rows match [$spec] — manifest-planned probe only, no rewrite"
+            val d = ctx.warehouse.deleteWhereRangeFiles(ctx.spark, table, c, lo, hi,
+              remanifest = true)
+            if (d.deleted) s"deleted rows with `$c` in [$spec]: $d"
+            else s"no rows match [$spec] — no rewrite: $d"
           case None =>
             val predicate = Transforms.str(params, "predicate")
             require(predicate.trim.nonEmpty,
               s"delete_where on `$table` needs a non-empty predicate=")
-            if (ctx.warehouse.deleteWhere(ctx.spark, table, predicate, remanifest = true))
-              s"deleted rows matching [$predicate]"
-            else s"no rows match [$predicate] — probe only, no rewrite"
+            val d = ctx.warehouse.deleteWhereFiles(ctx.spark, table, predicate,
+              remanifest = true)
+            if (d.deleted) s"deleted rows matching [$predicate]: $d"
+            else s"no rows match [$predicate] — no rewrite: $d"
         }
       case other => throw new IllegalArgumentException(
         s"unknown MAINTENANCE action '$other' (known: compact, optimize_zorder, " +

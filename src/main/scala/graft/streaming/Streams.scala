@@ -377,8 +377,9 @@ object Streams {
       // on EVERY batch — quadratic cumulative IO over the stream's
       // life). A bitmap without the sentinel (bootstrap, pre-r13 state)
       // reads as watermark-unknown and keeps the conservative scrub,
-      // whose no-match probes are metadata-sized since deleteWhere
-      // stopped rewriting on zero matches.
+      // which decides each file from its footer statistics: files
+      // holding only this batch are dropped whole, files without it are
+      // kept, and neither costs a job.
       val bloomRaw = warehouse.read(spark, bloomTable)
       val bloom = bloomRaw.filter(col("w") >= 0)
       val watermark = bloomRaw.filter(col("w") === -1L)
@@ -387,8 +388,8 @@ object Streams {
       // form (r14) plans the no-match probe through a stats manifest
       // when the out/seen tables carry one (a maintenance workflow on
       // them composes for free — zero scheduled files = one manifest
-      // read, no scan job); unmanifested tables keep the footer-
-      // pushdown probe unchanged.
+      // read, no scan job); otherwise each file is decided from its
+      // footer statistics, and only undecided files are probed.
       if (watermark.isNullAt(0) || watermark.getLong(0) >= b) {
         warehouse.deleteWhereRange(spark, outTable, "batch", b, b)
         warehouse.deleteWhereRange(spark, seenTable, "batch", b, b)

@@ -5,9 +5,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** Job-description labels for multi-action lifecycle bodies (guide §1.5):
   * the streaming/workflow operators run a dozen Spark jobs per step or
@@ -66,6 +68,10 @@ object Jobs {
     private val runMs = new AtomicLong
     private val shufWrite = new AtomicLong
     private val shufRead = new AtomicLong
+    // short call site per running SQL execution: AQE stage, broadcast
+    // and result jobs are submitted from Spark's own threads, where the
+    // job's own site is a thread-pool frame
+    private val sqlSites = new ConcurrentHashMap[Long, String]
 
     private val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -78,9 +84,11 @@ object Jobs {
         else if (group.forall(g.contains)) {
           e.stageIds.foreach(stages.add)
           val anatomy = e.stageInfos.map(s => s"${s.name.takeWhile(_ != '(').trim}:${s.numTasks}")
-          // Spark 4 leaves `callSite.short` unset on most jobs; the result
-          // stage (created last, highest id) is named by the same short site
-          val site = prop("callSite.short")
+          // Spark 4 leaves `callSite.short` unset on most jobs; a job of a
+          // SQL execution takes the execution's site, any other job its
+          // result stage's name (created last, highest id), the same site
+          val site = prop("spark.sql.execution.id").flatMap(id => Option(sqlSites.get(id.toLong)))
+            .orElse(prop("callSite.short"))
             .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)).getOrElse("")
           byId.synchronized {
             byId(e.jobId) = Job(e.jobId, e.time, -1L, prop("spark.job.description").getOrElse(""),
@@ -91,6 +99,13 @@ object Jobs {
 
       override def onJobEnd(e: SparkListenerJobEnd): Unit = byId.synchronized {
         byId.get(e.jobId).foreach(j => byId(e.jobId) = j.copy(end = e.time))
+      }
+
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sqlSites.put(s.executionId, shortSite(s.details).getOrElse(s.description)); ()
+        case s: SparkListenerSQLExecutionEnd => sqlSites.remove(s.executionId); ()
+        case _ => ()
       }
 
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -150,6 +165,20 @@ object Jobs {
       if (curE >= 0) covered + curE - curS else covered
     }
   }
+
+  /** Spark's short call site (`collect at Foo.scala:12`) from the long
+    * form an SQL execution records: its first frame is the last Spark
+    * method, its second the first user frame. The execution's
+    * description is the short site only when no job description is set.
+    */
+  private def shortSite(longForm: String): Option[String] =
+    longForm.split("\n") match {
+      case Array(sparkFrame, userFrame, _*) =>
+        val method = sparkFrame.takeWhile(_ != '(').split('.').last
+        val at = userFrame.dropWhile(_ != '(').drop(1).takeWhile(_ != ')')
+        if (method.nonEmpty && at.nonEmpty) Some(s"$method at $at") else None
+      case _ => None
+    }
 
   object Trace {
     /** Add a trace to `spark`'s listener bus; `close` removes it. A new

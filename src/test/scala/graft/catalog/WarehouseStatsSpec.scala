@@ -114,18 +114,24 @@ class WarehouseStatsSpec extends AnyFunSuite with SparkSupport {
       "rectangle file set must be the intersection of the per-dimension sets")
   }
 
-  test("a non-maintenance rewrite makes every manifest row stale: full scan, rows stay exact") {
-    // deleteWhere rewrites without re-manifesting (a per-batch caller
-    // must not pay a table-wide footer scan); the freshness rule keeps
-    // the read exact and merely loses pruning until the next refresh
+  test("a delete leaves its rewritten files unmanifested") {
+    // deleteWhere without remanifest (a per-batch caller must not pay a
+    // table-wide footer scan) rewrites only the files its footers
+    // cannot decide; those carry fresh names the manifest has never
+    // seen, so the freshness rule scans them, while carried files keep
+    // their names, bytes and so their exact manifest rows
     val (wh, xmax, _) = freshLayout()
+    val before = wh.read(spark, "t").inputFiles.toSet
     val someX = wh.read(spark, "t").select($"x").head().getLong(0)
-    wh.deleteWhere(spark, "t", s"x = $someX")
+    val d = wh.deleteWhereFiles(spark, "t", s"x = $someX")
+    assert(d.rewritten > 0, d)
+    val rewritten = wh.read(spark, "t").inputFiles.toSet -- before
+    assert(rewritten.nonEmpty)
     val (lo, hi) = (xmax / 4, xmax / 4 + xmax / 8)
     val pruned = wh.statsPrunedRead(spark, "t", "x", lo, hi)
     assert(rowSet(pruned) == rowSet(wh.read(spark, "t").filter($"x".between(lo, hi))))
-    assert(pruned.inputFiles.toSet == wh.read(spark, "t").inputFiles.toSet,
-      "after a non-maintenance rewrite no current file is manifested, so all must be scanned")
+    assert(rewritten.subsetOf(pruned.inputFiles.toSet),
+      "every rewritten, unmanifested file must be scanned")
   }
 
   test("deleteWhere(remanifest=true) re-collects the manifest with the retention rewrite") {

@@ -71,6 +71,10 @@ class MaintenanceWorkflowSpec extends AnyFunSuite with SparkSupport {
     assert(ca == 1, s"compact at rows_per_file=1000000 must fold to one file (got $ca)")
     assert(delMsg.contains("deleted rows matching"),
       s"the retention cut must report a real rewrite, got: $delMsg")
+    // the compacted file holds rows on both sides of the horizon, so its
+    // footer decides nothing: it is probed and rewritten
+    assert(delMsg.endsWith(": 0 files dropped, 0 kept, 1 rewritten"),
+      s"the retention cut must account its one mixed file as rewritten, got: $delMsg")
     val (_, oa) = counts(optMsg)
     assert(oa == math.max(1, math.ceil(retained.toDouble / 256).toInt),
       "optimize_zorder must re-split the RETAINED rows into ceil(rows / rows_per_file) files")

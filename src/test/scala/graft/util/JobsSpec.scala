@@ -55,6 +55,24 @@ class JobsSpec extends AnyFunSuite with SparkSupport {
     }
   }
 
+  test("jobs Spark submits from its own threads take the query's call site") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    traced(None) { trace =>
+      (1 to Repeats).foreach { round =>
+        trace.reset()
+        // AQE runs the shuffle stage and the result stage as jobs of its own,
+        // submitted from a Spark thread pool; a label does not hide the site
+        spark.range(1000).groupBy(col("id") % 10).count().collect()
+        Jobs.labeled(spark, s"round $round") {
+          spark.range(1000).groupBy(col("id") % 7).count().collect()
+        }
+        val jobs = trace.drain().jobs
+        assert(jobs.size >= 4, s"round $round: ${jobs.map(_.site)}")
+        assert(jobs.forall(_.site.startsWith("collect at JobsSpec.scala:")), jobs.map(_.site))
+      }
+    }
+  }
+
   test("jobs outside the trace's group are not counted, nor are drain sentinels") {
     val sc = spark.sparkContext
     traced(Some("jobs-spec-in")) { trace =>
