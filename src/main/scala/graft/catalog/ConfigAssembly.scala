@@ -113,14 +113,20 @@ object ConfigAssembly {
 
   /** Warehouse for a realization: the tenant-resolved target when the
     * config model carries one (a parquet-dir target IS a warehouse
-    * root), the service default otherwise.
+    * root), the service default otherwise. One instance per
+    * (dir, format), so every step writing to a tenant dir shares its
+    * table monitors and manifest memo.
     */
   def warehouseFor(real: RealizationSpec, default: Warehouse): Warehouse =
     real.connections match {
       case Some(Connections.Resolved(_, Connections.ParquetDir(dir))) =>
-        new Warehouse(dir, default.format)
+        tenantWarehouses.computeIfAbsent((dir, default.format),
+          k => new Warehouse(k._1, k._2))
       case _ => default
     }
+
+  private val tenantWarehouses =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Warehouse]()
 
   private def stepsOf(workflowId: Int, umsetzungId: Long, cfg: ConfigSet): Seq[StepSpec] =
     cfg.umsetzungSchritte

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the engine-side stand-in for the reference's target DBMS
   * (`SqlBulkCopy` sinks, `CommandExecuter.cs:802-982`). On a cluster
   * this is a warehouse path (or Delta/Iceberg catalog); steps only see
-  * read/append/overwrite, so the swap is invisible to them.
+  * read/append/replace, so the swap is invisible to them.
   */
 final class Warehouse(val dir: String, val format: String = "parquet") {
 
@@ -25,6 +25,8 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
 
   /** One stats-manifest row: (part file, column, rows, vmin, vmax). */
   private type StatRow = (String, String, Long, Long, Long)
+  private val StatSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, colname STRING, rows BIGINT, vmin BIGINT, vmax BIGINT")
 
   /** Driver-side memo of stats-manifest contents, keyed by manifest
     * table and VALIDATED against the manifest dir's part-file listing
@@ -36,8 +38,8 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     * row per part file × layout column — the same driver-sized argument
     * as the manifest itself), NOT query results: per-micro-batch
     * consumers ([[statsPrunedScanKeys]] in the admission streams,
-    * [[statsPrunedScan]] in the rewind scrub) were paying one
-    * collect-job per call to re-learn an unchanged manifest.
+    * [[statsPrunedScan]] in the rewind scrub) re-learn an unchanged
+    * manifest with one listing instead of a footer and row read.
     * [[refreshStats]]/[[refreshStatsIncremental]] seed it at write time
     * (their rows are already driver-side), so refresh-per-batch
     * maintenance never re-reads either. Staleness spec:
@@ -47,31 +49,28 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
   private val manifestMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Seq[StatRow])]()
 
-  private def manifestFingerprint(statsTbl: String): Seq[(String, Long, Long)] = {
-    val d = new java.io.File(path(statsTbl))
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toSeq.filter(_.getName.endsWith(s".$format")).sortBy(_.getName)
-      .map(f => (f.getName, f.length(), f.lastModified()))
-  }
+  private def manifestFingerprint(spark: SparkSession,
+      statsTbl: String): Seq[(String, Long, Long)] =
+    DriverParquet.files(spark, path(statsTbl))
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
 
   /** Read `table`'s stats manifest rows through the fingerprint memo —
-    * one collect job on first sight or after any refresh, free while
-    * the manifest's files are unchanged. Caller has already checked
-    * [[exists]] on the manifest table.
+    * read on the driver ([[DriverParquet.rows]], no job) on first sight
+    * or after any refresh, free while the manifest's files are
+    * unchanged. Caller has already checked [[exists]] on the manifest
+    * table.
     */
   private def loadManifest(spark: SparkSession, table: String): Seq[StatRow] = {
     val statsTbl = statsTable(table)
-    val fp = manifestFingerprint(statsTbl)
+    val fp = manifestFingerprint(spark, statsTbl)
     val hit = manifestMemo.get(statsTbl)
     if (hit != null && hit._1 == fp) hit._2
     else {
-      val rows = read(spark, statsTbl)
-        .select("file", "colname", "rows", "vmin", "vmax").collect()
+      val rows = DriverParquet.rows(spark, path(statsTbl), Some(StatSchema))
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .toSeq
       // re-fingerprint AFTER the read: a swap racing the read must not
       // be memoized under the post-swap fingerprint with pre-swap rows
-      val fp2 = manifestFingerprint(statsTbl)
+      val fp2 = manifestFingerprint(spark, statsTbl)
       if (fp2 == fp) manifestMemo.put(statsTbl, (fp, rows))
       rows
     }
@@ -80,62 +79,9 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
   /** Seed the memo with rows this instance just wrote (refresh paths —
     * the rows are already driver-side, so the next reader pays nothing).
     */
-  private def seedManifestMemo(statsTbl: String, rows: Seq[StatRow]): Unit = {
-    manifestMemo.put(statsTbl, (manifestFingerprint(statsTbl), rows))
-    ()
-  }
-
-  /** Fingerprint-validated READ-SCHEMA memo (r16): resolving a parquet
-    * table runs footer inference per `spark.read` call — on a
-    * several-dozen-file table that is a parallel footer JOB, paid by
-    * every [[read]] of every micro-batch and workflow step (the
-    * driver-gap constant the r15 GateProbe quantified at 31 % of suite
-    * wall). The memo serves the resolved schema while the table's
-    * part-file listing (name, length, mtime) is unchanged, and is
-    * SEEDED at write time: a full replacement's read-back schema is the
-    * written schema with every field nullable (parquet inference's
-    * rule), and a schema-identical append keeps the previous entry —
-    * any other shape invalidates toward fresh inference. External
-    * writers change the listing, so the fingerprint re-infers — same
-    * staleness argument as [[manifestMemo]].
-    */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]()
-
-  /** Seed after a write. A REPLACEMENT's read-back schema is the
-    * written one (nullable); an APPEND's only when the pre-write table
-    * was absent, or the memo was valid for the pre-write listing and
-    * the appended schema matches it (mixed-schema or externally-touched
-    * tables invalidate toward fresh inference).
-    */
-  /** The file-source read-back rule ("all columns are automatically
-    * converted to be nullable") — `DataType.asNullable` is
-    * private[spark], so mirror its recursion.
-    */
-  private def allNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = dt match {
-    case s: org.apache.spark.sql.types.StructType =>
-      org.apache.spark.sql.types.StructType(s.fields.map(f =>
-        f.copy(dataType = allNullable(f.dataType), nullable = true)))
-    case a: org.apache.spark.sql.types.ArrayType =>
-      org.apache.spark.sql.types.ArrayType(allNullable(a.elementType),
-        containsNull = true)
-    case m: org.apache.spark.sql.types.MapType =>
-      org.apache.spark.sql.types.MapType(allNullable(m.keyType),
-        allNullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
-
-  private def seedSchemaMemo(table: String,
-      written: org.apache.spark.sql.types.StructType, replaced: Boolean,
-      preFp: Seq[(String, Long, Long)] = Seq.empty): Unit = {
-    val expected = allNullable(written)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val prev = schemaMemo.get(table)
-    val safe = replaced || preFp.isEmpty ||
-      (prev != null && prev._1 == preFp && prev._2 == expected)
-    if (safe) schemaMemo.put(table, (manifestFingerprint(table), expected))
-    else schemaMemo.remove(table)
+  private def seedManifestMemo(spark: SparkSession, statsTbl: String,
+      rows: Seq[StatRow]): Unit = {
+    manifestMemo.put(statsTbl, (manifestFingerprint(spark, statsTbl), rows))
     ()
   }
 
@@ -178,39 +124,29 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       new java.io.File(path(table)).exists()
   }
 
+  /** A parquet table reads with the schema its footer declares
+    * ([[DriverParquet.schema]], as [[Tables.load]] reads), so resolving
+    * it runs no schema-inference job; a table with no data files throws
+    * `FileNotFoundException`. Other formats read as Spark infers them.
+    */
   def read(spark: SparkSession, table: String): DataFrame = {
     recoverIfTorn(table)
-    val hit = schemaMemo.get(table)
-    if (hit != null && hit._1 == manifestFingerprint(table))
-      spark.read.schema(hit._2).format(format).load(path(table))
-    else {
-      val fp = manifestFingerprint(table)
-      val df = spark.read.format(format).load(path(table))
-      if (fp.nonEmpty) schemaMemo.put(table, (fp, df.schema))
-      df
-    }
+    val p = path(table)
+    if (format == "parquet") spark.read.schema(DriverParquet.schema(spark, p)).parquet(p)
+    else spark.read.format(format).load(p)
   }
 
   /** Bulk append — the reference's `WriteToServer` fast path. */
-  def append(df: DataFrame, table: String): Unit = {
-    val preFp = manifestFingerprint(table)
+  def append(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Append).format(format).save(path(table))
-    seedSchemaMemo(table, df.schema, replaced = false, preFp)
-  }
 
-  def overwrite(df: DataFrame, table: String): Unit = {
-    df.write.mode(SaveMode.Overwrite).format(format).save(path(table))
-    seedSchemaMemo(table, df.schema, replaced = true)
-  }
-
-  /** CRASH-SAFE full replacement — [[overwrite]] is delete-then-write
-    * (a crash in the window leaves a torn table), this is the same
-    * swap [[deleteWhere]]/[[compact]]/[[upsert]] rewrite through: the
-    * new contents land in a side dir first, so a crash at any point
-    * leaves the old or the new copy recoverable, and `contents` may
-    * read FROM the table it replaces (the side-dir write never
-    * overwrites its own input). Use for state a restart must be able
-    * to trust — e.g. the streaming bloom bitmap (r12 review).
+  /** Full replacement, crash-safe: the same swap
+    * [[deleteWhere]]/[[compact]]/[[upsert]] rewrite through. The new
+    * contents land in a side dir first, so a crash at any point leaves
+    * the old or the new copy recoverable, a failed write leaves the
+    * table as it was (absent stays absent), and `contents` may read
+    * FROM the table it replaces (the side-dir write never overwrites
+    * its own input).
     */
   def replace(table: String, contents: DataFrame): Unit =
     rewriteInPlace(table, contents)
@@ -302,7 +238,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     import org.apache.spark.sql.functions.col
     if (exists(spark, table) && exists(spark, statsTable(table)) &&
         statsPrunedScan(spark, table, Seq((column, lo, hi))).scheduled == 0)
-      Deletion(0, partFiles(table), 0)
+      Deletion(0, partFiles(spark, table), 0)
     else deleteMatching(spark, table, data =>
       col(column) >= typedBound(data.schema, column, lo) &&
         col(column) <= typedBound(data.schema, column, hi), remanifest)
@@ -358,7 +294,6 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
         }
         ()
       }
-      seedSchemaMemo(table, data.schema, replaced = true)
     }
     if (remanifest) updateManifest(spark, table)
     Deletion(dropped.size, kept.size, rewritten.size)
@@ -482,7 +417,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     */
   def compact(spark: SparkSession, table: String, targetRowsPerFile: Long = 1000000L): (Int, Int) = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val before = partFiles(table)
+    val before = partFiles(spark, table)
     if (exists(spark, table)) {
       val df = read(spark, table)
       val rows = df.count()
@@ -490,7 +425,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       rewriteInPlace(table, df.repartition(nFiles))
       updateManifest(spark, table)
     }
-    (before, partFiles(table))
+    (before, partFiles(spark, table))
   }
 
   /** Compact + RE-LAYOUT a table in z-key order (r12) — the operation
@@ -532,7 +467,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       quantile: Boolean = false): (Int, Int) = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val before = partFiles(table)
+    val before = partFiles(spark, table)
     if (exists(spark, table)) {
       val df = read(spark, table)
       // ONE stats job for row count AND every column's bounds (r12
@@ -567,7 +502,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
         updateManifest(spark, table)
       }
     }
-    (before, partFiles(table))
+    (before, partFiles(spark, table))
   }
 
   /** A rewrite invalidates the manifest rows of the files it replaces
@@ -625,7 +560,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     import spark.implicits._
     replace(statsTable(table),
       rows.toDF("file", "colname", "rows", "vmin", "vmax").coalesce(1))
-    seedManifestMemo(statsTable(table), rows)
+    seedManifestMemo(spark, statsTable(table), rows)
     rows.size
   }
 
@@ -662,7 +597,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       s"refreshStatsIncremental: `$table`'s manifest carries no column rows — " +
         "run the full refresh_stats cols=… first")
     recoverIfTorn(table)
-    val live = listPartFiles(table).toSet
+    val live = listPartFiles(spark, table).toSet
     val kept = manifest.filter(r => live.contains(r._1))
     val known = kept.map(_._1).toSet
     val newFiles = live -- known
@@ -682,7 +617,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     val merged = (kept ++ added ++ sentinels).sortBy(r => (r._1, r._2))
     replace(statsTable(table),
       merged.toDF("file", "colname", "rows", "vmin", "vmax").coalesce(1))
-    seedManifestMemo(statsTable(table), merged)
+    seedManifestMemo(spark, statsTable(table), merged)
     (kept.size, added.size + sentinels.size, manifest.size - kept.size)
   }
 
@@ -757,7 +692,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       col(c) >= typedBound(schema, c, lo) && col(c) <= typedBound(schema, c, hi)
     }.reduce(_ && _)
     if (!exists(spark, statsTable(table))) {
-      val total = partFiles(table)
+      val total = partFiles(spark, table)
       return PrunedScan(read(spark, table).where(residual), total, total)
     }
     val cols = ranges.map(_._1).toSet
@@ -765,7 +700,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
       .collect { case (f, c, rows, vmin, vmax) if cols.contains(c) =>
         (f, c) -> (rows, vmin, vmax) }.toMap
     recoverIfTorn(table)
-    val all = listPartFiles(table)
+    val all = listPartFiles(spark, table)
     val keep = all.filter { f =>
       ranges.forall { case (c, lo, hi) =>
         manifest.get((f, c)) match {
@@ -777,7 +712,7 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     val frame =
       if (keep.isEmpty) read(spark, table).where(lit(false))
       // explicit schema (r16): the pruned file set re-resolved footers
-      // on every plan — the schema is the table's (memoized) read schema
+      // on every plan — the schema is the table's footer-declared read schema
       else spark.read.schema(schema)
         .parquet(keep.map(f => s"${path(table)}/$f"): _*).where(residual)
     PrunedScan(frame, keep.size, all.size)
@@ -846,19 +781,19 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     import org.apache.spark.sql.functions.{col, lit}
     recoverIfTorn(table)
     if (keys.isEmpty)
-      return PrunedScan(read(spark, table).where(lit(false)), 0, partFiles(table))
+      return PrunedScan(read(spark, table).where(lit(false)), 0, partFiles(spark, table))
     val schema = read(spark, table).schema
     val sorted = keys.distinct.sorted.toIndexedSeq
     val residual = keyMembership(spark, schema, column, sorted)
     if (!exists(spark, statsTable(table))) {
-      val total = partFiles(table)
+      val total = partFiles(spark, table)
       return PrunedScan(residual(read(spark, table)), total, total)
     }
     val manifest = loadManifest(spark, table)
       .collect { case (f, c, rows, vmin, vmax) if c == column =>
         f -> (rows, vmin, vmax) }.toMap
     recoverIfTorn(table)
-    val all = listPartFiles(table)
+    val all = listPartFiles(spark, table)
     // binary search: the smallest key >= vmin exists and is <= vmax
     def anyKeyIn(vmin: Long, vmax: Long): Boolean = {
       var lo = 0; var hi = sorted.size
@@ -918,14 +853,11 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
     }
   }
 
-  private def partFiles(table: String): Int = listPartFiles(table).size
+  private def partFiles(spark: SparkSession, table: String): Int =
+    listPartFiles(spark, table).size
 
-  private def listPartFiles(table: String): Seq[String] = {
-    val d = new java.io.File(path(table))
-    if (d.isDirectory)
-      d.listFiles().toSeq.map(_.getName).filter(_.endsWith(s".$format")).sorted
-    else Seq.empty
-  }
+  private def listPartFiles(spark: SparkSession, table: String): Seq[String] =
+    DriverParquet.files(spark, path(table)).map(_.getPath.getName)
 
   /** Crash-safe table rewrite: the new contents land in a side dir, the
     * old data is renamed aside BEFORE the new copy moves into place, so
@@ -936,14 +868,11 @@ final class Warehouse(val dir: String, val format: String = "parquet") {
   private def rewriteInPlace(table: String, contents: org.apache.spark.sql.DataFrame): Unit = {
     // under the table monitor so recoverIfTorn can never slide a dir
     // beneath the swap's rename pair (ADVICE r10); same-table rewrites
-    // serialize, which they already required for correctness. The memo
-    // is seeded under it too: seeded after release, a rewrite could pair
-    // its schema with the files a later rewrite had already swapped in.
+    // serialize, which they already required for correctness
     monitor(table).synchronized {
       graft.util.AtomicSwap.swapInto(path(table), "__rewrite") { tmp =>
         contents.write.mode(SaveMode.Overwrite).format(format).save(tmp)
       }
-      seedSchemaMemo(table, contents.schema, replaced = true)
     }
   }
 }

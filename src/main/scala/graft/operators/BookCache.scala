@@ -55,18 +55,13 @@ import org.apache.spark.sql.DataFrame
   *
   * Source immutability is assumed, as with Spark's own CacheManager: a
   * dir whose parquet changes under an unchanged key must [[clear]] first.
+  * [[clear]] is also the one way to rule out a suspected stale book or
+  * to measure the cache's effect: every call after it trains afresh.
   */
 object BookCache {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
   private val BoundConst = 32
-
-  /** Ops kill switch: `SPARK_GRAFT_BOOKCACHE=0` makes every call build
-    * fresh (bypass, not just clear) — for isolating a suspected stale
-    * book in production, and for measuring the cache's effect (the
-    * FANIN.md number was taken this way).
-    */
-  private val enabled = !sys.env.get("SPARK_GRAFT_BOOKCACHE").contains("0")
 
   /** Entry bound; overflow clears wholesale (never reached by the gate
     * registry — ~6 distinct books per sf dir).
@@ -87,7 +82,6 @@ object BookCache {
     * jobs.
     */
   def apply(corpusLike: DataFrame, key: String)(build: => DataFrame): DataFrame = {
-    if (!enabled) return build
     val session = corpusLike.sparkSession
     val slot = s"${System.identityHashCode(session).toHexString}:$key"
     val hit = cache.get(slot)

@@ -2169,8 +2169,8 @@ object Pipeline {
       // replay-rewind key (r13); the historic keyset is batch 0
       wh.append(fp.filter(pmod($"doc_id", lit(4L)).isin(1L, 2L))
         .select($"fingerprint", lit(0L).as("batch")), "seen")
-      wh.overwrite(
-        Bloom.build(wh.read(s, "seen"), "fingerprint", mBits, k), "bloom")
+      wh.replace("bloom",
+        Bloom.build(wh.read(s, "seen"), "fingerprint", mBits, k))
       val stream = s.readStream.schema(fp.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
       val q = graft.streaming.Streams.bloomDedupStream(stream, "fingerprint",

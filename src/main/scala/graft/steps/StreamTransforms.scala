@@ -141,8 +141,8 @@ object StreamTransforms {
           Transforms.input(ctx, p, "seed")
             .select(col(key), lit(0L).as("batch")), seenT)
       if (!ctx.warehouse.exists(spark, bloomT))
-        ctx.warehouse.overwrite(graft.operators.Bloom.build(
-          ctx.warehouse.read(spark, seenT), key, mBits, k), bloomT)
+        ctx.warehouse.replace(bloomT, graft.operators.Bloom.build(
+          ctx.warehouse.read(spark, seenT), key, mBits, k))
       // the foreachBatch body's exchanges (probe distinct, confirm
       // anti-join, bitmap fold) are BATCH-sized, and AQE cannot coalesce
       // them under a streaming plan — drain on a source-sized clone (r16)

@@ -178,6 +178,19 @@ class ConfigAssemblySpec extends AnyFunSuite with SparkSupport {
     assert(new Warehouse(whB).read(spark, "tenant_out").count() == 1)
   }
 
+  test("a tenant target resolves to one Warehouse per (dir, format)") {
+    import graft.sources.Connections
+    val real = RealizationSpec(200L, connections = Some(Connections.Resolved(
+      source = Connections.ParquetDir(tmpDir("tenant-src")),
+      target = Connections.ParquetDir(tmpDir("tenant-shared")))))
+    val fallback = new Warehouse(tmpDir("tenant-fallback"))
+    val first = ConfigAssembly.warehouseFor(real, fallback)
+    // every step of the tenant shares the table monitors and manifest memo
+    assert(ConfigAssembly.warehouseFor(real, fallback) eq first)
+    assert(ConfigAssembly.warehouseFor(real.copy(id = 201L), fallback) eq first)
+    assert(!(ConfigAssembly.warehouseFor(real, new Warehouse(fallback.dir, "orc")) eq first))
+  }
+
   test("a present connection model with a missing tenant mapping refuses to assemble") {
     import graft.sources.Connections
     val base = slice.copy(

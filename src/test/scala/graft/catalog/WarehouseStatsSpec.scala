@@ -190,9 +190,10 @@ class WarehouseStatsSpec extends AnyFunSuite with SparkSupport {
   test("manifest memo: unchanged manifest plans with ZERO jobs, out-of-band swap is re-read (r16)") {
     val (wh, xmax, _) = freshLayout()
     val (lo, hi) = (xmax / 4, xmax / 4 + xmax / 8)
-    // warm: the refresh seeded the memo; this call must already plan
-    // without a manifest collect job — count jobs around it, after the
-    // listener bus has drained
+    // warm: the refresh seeded the memo; this call must plan from it
+    // without a job — count jobs around it, after the listener bus has
+    // drained (a miss reads the manifest on the driver, also without a
+    // job: WarehouseSpec)
     val warm = wh.statsPrunedScan(spark, "t", Seq(("x", lo, hi)))
     assert(warm.scheduled > 0 && warm.scheduled < warm.total)
     val trace = Jobs.Trace(spark)
@@ -637,12 +638,11 @@ class WarehouseStatsSpec extends AnyFunSuite with SparkSupport {
     assert(ex.getMessage.contains("does not exist"))
   }
 
-  test("concurrent rewrites with different schemas leave the schema memo equal to the files") {
+  test("after concurrent rewrites with different schemas the read schema equals the files' schema") {
     val wh = new Warehouse(TempDirs.scratch("wh-memo-race"))
     val frames = Seq(Seq((1L, "x")).toDF("id", "a"), Seq((1L, 2.0)).toDF("id", "b"))
     frames.map(df => java.util.concurrent.CompletableFuture.runAsync(
       () => (0 until 6).foreach(_ => wh.replace("t", df)))).foreach(_.join())
-    // read() plans with the memoized schema while the files match it
     assert(wh.read(spark, "t").schema == spark.read.parquet(s"${wh.dir}/t").schema)
   }
 }

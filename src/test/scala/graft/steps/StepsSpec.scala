@@ -50,13 +50,13 @@ class StepsSpec extends AnyFunSuite with SparkSupport {
   test("COPY into an existing destination aligns schema and fills audit defaults (CommandExecuter.cs:603-678)") {
     val (ctx, _, wh) = freshCtx()
     // pre-create destination with extra columns in a fixed order
-    wh.overwrite(spark.sql(
+    wh.replace("cust_dst", spark.sql(
       """SELECT CAST(1 AS BIGINT) AS custkey, CAST('x' AS STRING) AS name,
         |  CAST('u' AS STRING) AS nutzer,
         |  CAST('2020-01-01' AS TIMESTAMP_NTZ) AS abfragezeitpunkt,
         |  CAST('p' AS STRING) AS datenproduzent,
         |  CAST(NULL AS TIMESTAMP_NTZ) AS loeschdatum
-        |WHERE 1 = 0""".stripMargin), "cust_dst")
+        |WHERE 1 = 0""".stripMargin))
     val spec = StepSpec(2, CommandType.Copy, TaskType.Sql,
       "SELECT c_custkey AS custkey, c_name AS name FROM customer WHERE c_custkey <= 10",
       zieltabelle = Some("cust_dst"))

@@ -326,8 +326,8 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
     val base = tmpDir("graft-sd-step")
     val c = ctx(base)
     // seeded codebook TABLE: two orthogonal centroids in 2-D
-    c.warehouse.overwrite(
-      Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "ce"), "sdct")
+    c.warehouse.replace("sdct",
+      Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "ce"))
     def dropVecs(name: String, rows: Seq[(Long, Seq[Double])]): Unit = {
       val in = new java.io.File(s"$base/in")
       val tmp = new java.io.File(s"$base/tmp-$name")
@@ -363,8 +363,8 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
     import spark.implicits._
     val base = tmpDir("graft-sd-parts")
     val c = ctx(base)
-    c.warehouse.overwrite(
-      Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "ce"), "sdct2")
+    c.warehouse.replace("sdct2",
+      Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "ce"))
     val in = new java.io.File(s"$base/in")
     val tmp = new java.io.File(s"$base/tmp-v1")
     Seq((0L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
@@ -459,9 +459,9 @@ class StreamRegistrySpec extends AnyFunSuite with SparkSupport {
     val base = tmpDir("graft-ds-step")
     val c = ctx(base)
     // LM corpus table: the target language's bigrams get high weight
-    c.warehouse.overwrite(Seq(
+    c.warehouse.replace("ds_lm", Seq(
       (100L, "the quick fox", "en"),
-      (101L, "der schnelle fuchs", "de")).toDF("doc_id", "text", "lang"), "ds_lm")
+      (101L, "der schnelle fuchs", "de")).toDF("doc_id", "text", "lang"))
     def dropDocs(name: String, rows: Seq[(Long, String)]): Unit = {
       val in = new java.io.File(s"$base/in")
       val tmp = new java.io.File(s"$base/tmp-$name")

@@ -48,8 +48,8 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
     val wh = new graft.catalog.Warehouse(tmpDir("stream-bloom-wh"))
     wh.append(Seq("h1", "h2").toDF("key")
       .withColumn("batch", org.apache.spark.sql.functions.lit(0L)), "seen")
-    wh.overwrite(graft.operators.Bloom.build(
-      wh.read(spark, "seen"), "key", mBits, k), "bloom")
+    wh.replace("bloom", graft.operators.Bloom.build(
+      wh.read(spark, "seen"), "key", mBits, k))
     val input = MemoryStream[String]
     val query = Streams.bloomDedupStream(
       input.toDF().toDF("key"), "key", wh,
@@ -94,8 +94,8 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
       val wh = new graft.catalog.Warehouse(tmpDir(s"bloom-replay-$tag"))
       wh.append(Seq("h1", "h2").toDF("key")
         .withColumn("batch", org.apache.spark.sql.functions.lit(0L)), "seen")
-      wh.overwrite(graft.operators.Bloom.build(
-        wh.read(spark, "seen"), "key", mBits, k), "bloom")
+      wh.replace("bloom", graft.operators.Bloom.build(
+        wh.read(spark, "seen"), "key", mBits, k))
       wh
     }
     val batch1 = Seq("a", "b", "h1", "a").toDF("key") // within-batch dup a: both admitted
@@ -149,8 +149,8 @@ class StreamsSpec extends AnyFunSuite with SparkSupport {
     val wh = new graft.catalog.Warehouse(tmpDir("bloom-fastpath"))
     wh.append(Seq("h1").toDF("key")
       .withColumn("batch", org.apache.spark.sql.functions.lit(0L)), "seen")
-    wh.overwrite(graft.operators.Bloom.build(
-      wh.read(spark, "seen"), "key", mBits, k), "bloom")
+    wh.replace("bloom", graft.operators.Bloom.build(
+      wh.read(spark, "seen"), "key", mBits, k))
     def run(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
       Streams.bloomDedupBatch(df, id, "key", wh, "seen", "bloom", "out", mBits, k)
     run(Seq("a", "b").toDF("key"), 0L)
